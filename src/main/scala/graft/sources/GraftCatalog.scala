@@ -555,8 +555,9 @@ private[sources] class GraftStagedTable(dir: String,
     extends StagedTable with SupportsWrite {
 
   private def spark: SparkSession = SparkSession.active
-  @volatile private var staged: Vector[ManifestTable.FileEntry] =
-    Vector.empty
+  /** (table-relative stage dir, staged entries) once the write ran. */
+  @volatile private var staged: Option[(String, Vector[ManifestTable.FileEntry])] =
+    None
 
   override def name(): String = s"graft.`$dir`"
   override def schema(): StructType = tableSchema
@@ -570,26 +571,19 @@ private[sources] class GraftStagedTable(dir: String,
           new InsertableRelation {
             override def insert(data: Dataset[Row], overwrite: Boolean)
                 : Unit =
-              staged = ManifestTable.stageForCreate(spark, dir, data,
-                statsCols, partitionCols, bloomCols)
+              staged = Some(ManifestTable.stageForCreate(spark, dir, data,
+                statsCols, partitionCols, bloomCols))
           }
       }
     }
 
   override def commitStagedChanges(): Unit =
     ManifestTable.publishCreate(spark, dir, tableSchema.json,
-      statsCols, partitionCols, bloomCols, staged)
+      statsCols, partitionCols, bloomCols,
+      staged.fold(Vector.empty[ManifestTable.FileEntry])(_._2))
 
-  override def abortStagedChanges(): Unit = {
-    val c = spark.sparkContext.hadoopConfiguration
-    // staged paths are table-relative `data/<commitId>/…` — drop the
-    // whole per-stage commit dirs, leaving no orphan bytes behind
-    staged.map(f => f.path.split('/').take(2).mkString("/")).distinct
-      .foreach { d =>
-        val p = new Path(dir, d)
-        p.getFileSystem(c).delete(p, true)
-      }
-  }
+  override def abortStagedChanges(): Unit =
+    staged.foreach { case (rel, _) => ManifestTable.dropStaged(spark, dir, rel) }
 }
 
 object GraftCatalog {

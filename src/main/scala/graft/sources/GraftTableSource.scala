@@ -511,7 +511,7 @@ private[sources] class GraftTableStreamSource(sqlContext: SQLContext,
         .getOrElse(Set.empty[String])
       val added = cur.files.filterNot(f => prevPaths(f.path))
       if (added.isEmpty) None
-      else Some(ManifestTable.readFiles(spark, dir, added, schema,
+      else Some(ManifestTable.readFiles(spark, dir, cur, added, schema,
         startSnap.renames))
     }
     val batch = steps.reduceOption(_ unionByName _).getOrElse(

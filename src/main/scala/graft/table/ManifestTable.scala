@@ -16,7 +16,7 @@ import org.json4s.jackson.JsonMethods
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Or => COr}
+import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Or => COr}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -74,7 +74,9 @@ import org.apache.spark.sql.types._
   * (min = max = value), so partition pruning and stats pruning are the
   * same mechanism.
   *
-  * '''Pruning''' ([[read(spark:org\.apache\.spark\.sql\.SparkSession,dir:String,filter:org\.apache\.spark\.sql\.Column)* read(dir, filter)]])
+  * '''Pruning''' happens on every read — head, time travel, streaming and
+  * the commit-side scans of touched files — inside the scan's
+  * [[ManifestFileIndex]], from the filters Catalyst pushes into it. It
   * walks the filter's Catalyst expression tree and keeps a file iff
   * the predicate MAY hold somewhere in [min, max] — conjunction
   * narrows, disjunction widens, anything unrecognized (or any column
@@ -1313,9 +1315,8 @@ object ManifestTable {
 
   private[table] def stage(spark: SparkSession, dir: String, df: DataFrame,
       statsCols: Seq[String], partitionCols: Seq[String],
-      bloomCols: Seq[String] = Nil): Vector[FileEntry] = {
-    val commitId = UUID.randomUUID().toString
-    val rel = s"$DataDir/$commitId"
+      bloomCols: Seq[String] = Nil,
+      rel: String = s"$DataDir/${UUID.randomUUID()}"): Vector[FileEntry] = {
     val abs = new Path(dir, rel)
     // parquet-NATIVE bloom filters: the writer builds them while it
     // writes (no extra data pass); they live in the footer and are
@@ -1809,16 +1810,28 @@ object ManifestTable {
     * not exist until [[publishCreate]] commits version 0 listing them,
     * so CTAS pays ONE commit instead of create-empty + append (two
     * commits, two footer sweeps, one read-back). Identical building
-    * blocks to [[create]], just split at the stage/publish seam. */
+    * blocks to [[create]], just split at the stage/publish seam.
+    * Returns the table-relative stage dir holding every staged byte
+    * (what an abort hands to [[dropStaged]]) with the staged entries; a
+    * failed stage drops its own dir before rethrowing. */
   private[graft] def stageForCreate(spark: SparkSession, dir: String,
       df: DataFrame, statsCols: Seq[String], partitionCols: Seq[String],
-      bloomCols: Seq[String]): Vector[FileEntry] = {
+      bloomCols: Seq[String]): (String, Vector[FileEntry]) = {
     require(latestVersion(spark, dir).isEmpty,
       s"table already exists at $dir — use append/overwrite/merge")
     (statsCols ++ partitionCols ++ bloomCols).foreach { c =>
       require(df.schema.fieldNames.contains(c), s"column $c not in schema")
     }
-    stage(spark, dir, df, statsCols, partitionCols, bloomCols)
+    val rel = s"$DataDir/${UUID.randomUUID()}"
+    try rel -> stage(spark, dir, df, statsCols, partitionCols, bloomCols, rel)
+    catch { case NonFatal(e) => dropStaged(spark, dir, rel); throw e }
+  }
+
+  /** Delete a stage dir returned by [[stageForCreate]]. */
+  private[graft] def dropStaged(spark: SparkSession, dir: String,
+      rel: String): Unit = {
+    val p = new Path(dir, rel)
+    p.getFileSystem(conf(spark)).delete(p, true)
   }
 
   /** Phase 2 of the staged CTAS: publish version 0 over files staged by
@@ -2256,22 +2269,33 @@ object ManifestTable {
     (phys, project)
   }
 
-  private[table] def scanWith(spark: SparkSession, dir: String, files: Seq[FileEntry],
-      schema: StructType,
-      dvs: Map[String, Vector[String]] = Map.empty,
-      renames: Map[String, Vector[String]] = Map.empty): DataFrame = {
+  /** The raw physical read of `files` (no rename projection, no DV
+    * subtraction) through a [[ManifestFileIndex]] over `snap`'s version:
+    * Catalyst's pushed filters prune the file list, and nothing is
+    * listed. */
+  private def rawScan(spark: SparkSession, dir: String, snap: Snapshot,
+      files: Seq[FileEntry], physSchema: StructType): DataFrame =
+    ManifestFileIndex.frame(spark,
+      new ManifestFileIndex(spark, dir, snap.copy(files = files.toVector)),
+      physSchema)
+
+  /** Scan `files` of `snap` under `schema` (a logical schema over the
+    * `renames` lineage), subtracting `snap`'s deletion vectors. The one
+    * read path: every table read and every commit-side scan of touched
+    * files plans here, so each prunes files from the filters Catalyst
+    * pushes into its scan. */
+  private[table] def scanWith(spark: SparkSession, dir: String, snap: Snapshot,
+      files: Seq[FileEntry], schema: StructType,
+      renames: Map[String, Vector[String]]): DataFrame = {
     val (physSchema, project) = renamePlan(schema, renames)
-    def plain(fs: Seq[FileEntry]): DataFrame =
-      // explicit leaf files ⇒ each file's parent is its own base path,
-      // so Spark never re-infers partition columns from the __p_ dirs
-      project(spark.read.schema(physSchema)
-        .parquet(fs.map(f => new Path(dir, f.path).toString): _*))
     if (files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
+      val dvs = snap.dvs
       val (dvFiles, plainFiles) =
         files.partition(f => dvs.get(f.path).exists(_.nonEmpty))
-      if (dvFiles.isEmpty) plain(files)
+      def plain = project(rawScan(spark, dir, snap, plainFiles, physSchema))
+      if (dvFiles.isEmpty) plain
       else {
         // merge-on-read: subtract each file's deletion vector — a
         // BROADCAST anti-join on (file basename, parquet row position),
@@ -2280,8 +2304,7 @@ object ManifestTable {
         // the bitmap into the scan itself; the join is the declarative
         // equivalent at the same asymptotics. The _metadata access
         // rides the RAW physical read (before the rename projection).
-        val raw = spark.read.schema(physSchema)
-          .parquet(dvFiles.map(f => new Path(dir, f.path).toString): _*)
+        val raw = rawScan(spark, dir, snap, dvFiles, physSchema)
         val dvDirs = dvFiles.flatMap(f => dvs(f.path)).distinct
         // one DV dir may be shared by several files (one delete commit
         // touching many files writes ONE dir) — keep only the pairs for
@@ -2304,52 +2327,54 @@ object ManifestTable {
             col("__base") === col("__dv_base") &&
               col("__idx") === col("__dv_idx"), "left_anti"))
         if (plainFiles.isEmpty) subtracted
-        else plain(plainFiles).unionByName(subtracted)
+        else plain.unionByName(subtracted)
       }
     }
   }
 
   private def scan(spark: SparkSession, dir: String, snap: Snapshot): DataFrame =
-    scanWith(spark, dir, snap.files, snap.schema, snap.dvs, snap.renames)
+    scanWith(spark, dir, snap, snap.files, snap.schema, snap.renames)
 
-  /** Latest snapshot, full scan. */
+  /** Latest snapshot. Like every read, a filter applied on the result
+    * prunes files by manifest bounds and blooms ([[ManifestFileIndex]]). */
   def read(spark: SparkSession, dir: String): DataFrame =
     scan(spark, dir, current(spark, dir))
 
-  /** Latest snapshot with MANIFEST-LEVEL PRUNING at two granularities:
+  /** Latest snapshot with `filter` applied, pruned at two granularities:
     * files whose [min, max] bounds (footer stats and exact partition
-    * values) prove `filter` cannot match are skipped before the scan
-    * is planned, and inside surviving multi-row-group files the same
+    * values) or blooms prove `filter` cannot match are never listed for
+    * the scan, and inside surviving multi-row-group files the same
     * test runs per ROW GROUP — only the byte ranges of matching groups
     * are handed to the scan, so a needle query on a 1 GB file reads
-    * one row group, not the file. The filter is re-applied on the
-    * survivors, so the result always equals `read(dir).where(filter)` —
-    * pruning can only skip IO. Supports =, <=>, <, <=, >, >=, IN, AND,
-    * OR over column-vs-foldable comparisons; anything else keeps the
-    * file/group. */
+    * one row group, not the file. The result always equals
+    * `read(dir).where(filter)` — pruning can only skip IO. Supports =,
+    * <=>, <, <=, >, >=, IN, AND, OR over column-vs-foldable
+    * comparisons; anything else keeps the file/group. */
   def read(spark: SparkSession, dir: String, filter: Column): DataFrame =
     readSnapshot(spark, dir, current(spark, dir), Some(filter))
 
-  /** Time travel: the table exactly as of snapshot `version`. */
+  /** Time travel: the table exactly as of snapshot `version`. A filter
+    * on the result prunes files exactly as at the head. */
   def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame =
     scan(spark, dir, readManifest(spark, dir, version))
 
-  /** Plain scan of an explicit file list under `schema` (no DV
-    * subtraction — the streaming source reads files at the version
-    * that ADDED them, before any vector can reference them). */
+  /** Plain scan of files `cur` added, under `schema` (no DV subtraction
+    * — the streaming source reads files at the version that ADDED them,
+    * before any vector can reference them). */
   private[graft] def readFiles(spark: SparkSession, dir: String,
-      files: Seq[FileEntry], schema: StructType,
-      renames: Map[String, Vector[String]] = Map.empty): DataFrame =
-    scanWith(spark, dir, files, schema, renames = renames)
+      cur: Snapshot, files: Seq[FileEntry], schema: StructType,
+      renames: Map[String, Vector[String]]): DataFrame =
+    scanWith(spark, dir, cur.copy(dvs = Map.empty), files, schema, renames)
 
-  /** Scan an explicit snapshot with optional manifest pruning — the
-    * shared read path behind `read(dir, filter)` AND the
-    * `format("graft")` DataSourceV2 connector: file-level pruning,
-    * then ROW-GROUP-level pruning inside surviving multi-group files
-    * (matching byte ranges only, planned via
+  /** Scan an explicit snapshot with an optional filter — the shared
+    * read path behind `read(dir, filter)` AND the `format("graft")`
+    * DataSourceV2 connector. File pruning happens in the scan's
+    * [[ManifestFileIndex]]; multi-row-group files the filter only
+    * partly matches are read as the byte ranges of their matching row
+    * groups (planned via
     * [[org.apache.spark.sql.GraftSqlBridge.parquetRangeFrame]] — the
-    * pruned groups are never opened), then DV subtraction. The filter
-    * is re-applied on everything scanned, so pruning only skips IO. */
+    * pruned groups are never opened). The filter is re-applied on
+    * everything scanned, so pruning only skips IO. */
   private[graft] def readSnapshot(spark: SparkSession, dir: String,
       snap: Snapshot, filter: Option[Column],
       /** Pruned survivor set a caller already computed for THIS
@@ -2359,22 +2384,30 @@ object ManifestTable {
     filter match {
     case Some(c) =>
       val expr = org.apache.spark.sql.GraftSqlBridge.expr(c)
-      val survivors = precomputed.getOrElse(pruneFilesBloom(spark, dir, snap, c))
+      val files = precomputed.getOrElse(snap.files)
+      def hasDv(f: FileEntry) = snap.dvs.get(f.path).exists(_.nonEmpty)
+      // files needing more than a plain scan are judged up front, so the
+      // plan carries that machinery only for survivors: a vectored file
+      // plans the DV anti-join, a multi-row-group file may read as byte
+      // ranges. The scan's index prunes every other file.
+      val special = files.filter(f => hasDv(f) || f.rgs.size > 1)
+      val kept =
+        if (special.isEmpty) special
+        else pruneExpr(spark, dir, snap.copy(files = special), expr)
       // row-group pruning applies to multi-group files WITHOUT deletion
       // vectors (a DV read needs _metadata row positions over the whole
-      // file); everything else scans the normal way
-      val (rgCandidates, whole) = survivors.partition(f =>
-        f.rgs.size > 1 && !snap.dvs.get(f.path).exists(_.nonEmpty))
-      val judged = rgCandidates.map(f => f -> keptGroups(f, snap.schema, expr))
-      val (allKept, partial) = judged.partition { case (f, kept) =>
-        kept.size == f.rgs.size }
-      val fullFiles = whole ++ allKept.map(_._1)
+      // file)
+      val partial = kept.filter(f => f.rgs.size > 1 && !hasDv(f))
+        .map(f => f -> keptGroups(f, snap.schema, expr))
+        .filter { case (f, groups) => groups.size < f.rgs.size }
+      val skip = (special.iterator.map(_.path).toSet --
+        kept.map(_.path)) ++ partial.map(_._1.path)
+      val base = scanWith(spark, dir, snap, files.filterNot(f => skip(f.path)),
+        snap.schema, snap.renames)
       val ranges = partial.flatMap { case (f, kept) =>
         rangeRuns(f, kept).map { case (start, len) =>
           (new Path(dir, f.path).toString, start, len, f.bytes) }
       }
-      val base = scanWith(spark, dir, fullFiles, snap.schema, snap.dvs,
-        snap.renames)
       val withRanges =
         if (ranges.isEmpty) base
         else {
@@ -2502,7 +2535,8 @@ object ManifestTable {
     hit.get
   }
 
-  /** Time travel by wall clock: the table as of `tsMillis`. */
+  /** Time travel by wall clock: the table as of `tsMillis`. A filter
+    * on the result prunes files exactly as at the head. */
   def readAsOf(spark: SparkSession, dir: String, tsMillis: Long): DataFrame =
     readVersion(spark, dir, versionAsOf(spark, dir, tsMillis))
 
@@ -2514,9 +2548,11 @@ object ManifestTable {
     * MANY-file manifest (10⁵+) is judged on a driver thread pool —
     * plan-time pruning stays sub-second into the 10⁶-file range (and
     * [[filesFrame]] remains the fully distributed escape hatch). */
-  def pruneFiles(snap: Snapshot, filter: Column): Vector[FileEntry] = {
+  def pruneFiles(snap: Snapshot, filter: Column): Vector[FileEntry] =
+    pruneIntervals(snap, org.apache.spark.sql.GraftSqlBridge.expr(filter))
+
+  private def pruneIntervals(snap: Snapshot, e: Expression): Vector[FileEntry] = {
     val schema = snap.schema
-    val e = org.apache.spark.sql.GraftSqlBridge.expr(filter)
     val files = snap.files
     if (files.size < 50000) files.filter(f => mayMatch(f, schema, e))
     else {
@@ -2637,6 +2673,13 @@ object ManifestTable {
       case LessThan(l, r) => binary(l, r, _ < 0, _ > 0)
       case LessThanOrEqual(l, r) => binary(l, r, _ <= 0, _ >= 0)
       case In(a, vs) => inList(a, vs)
+      // OptimizeIn turns a long resolved IN list into a set of literals
+      case InSet(a, vs) => attrName(a) match {
+        case Some(n) =>
+          val prims = vs.toSeq.flatMap(litPrim(_, a.dataType))
+          prims.size != vs.size || prims.exists(p => boundsAdmit(n, p, _ == 0))
+        case None => true
+      }
       // A Column built through the public DataFrame API arrives
       // UNANALYZED: comparisons are function calls by name. Same
       // dispatch, same conservatism (unknown names keep the file).
@@ -2686,13 +2729,17 @@ object ManifestTable {
     * value set the whole filter cannot match outside of — exactly the
     * predicates a bloom filter can answer. Disjunctions and range
     * predicates contribute nothing (conservative). */
-  private[table] def pointLookups(filter: Column,
+  private def pointLookups(filter: Expression,
       bloomCols: Seq[String]): Map[String, Seq[Any]] = {
     val want = bloomCols.toSet
     def ofConjunct(c: Expression): Option[(String, Seq[Any])] = c match {
       case EqualTo(l, r) => eq(l, r)
       case EqualNullSafe(l, r) => eq(l, r)
       case In(a, vs) => in(a, vs)
+      case InSet(a, vs) => attrNameOf(a).filter(want) flatMap { n =>
+        val prims = vs.toSeq.flatMap(litPrim(_, a.dataType))
+        if (prims.size == vs.size) Some(n -> prims) else None
+      }
       case uf: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction =>
         (uf.nameParts.last.toLowerCase(java.util.Locale.ROOT),
           uf.arguments.toList) match {
@@ -2713,8 +2760,7 @@ object ManifestTable {
         val prims = vs.flatMap(foldPrim)
         if (prims.size == vs.size) Some(n -> prims) else None
       }
-    conjunctsOf(org.apache.spark.sql.GraftSqlBridge.expr(filter))
-      .flatMap(ofConjunct).toMap
+    conjunctsOf(filter).flatMap(ofConjunct).toMap
   }
 
   /** Hash `v` (a pruning primitive) for this column chunk's bloom
@@ -2886,10 +2932,16 @@ object ManifestTable {
     * probe runs as one Spark job so the driver never serializes 10⁵
     * footer opens ([[pruneFilesBloomDistributed]]). */
   def pruneFilesBloom(spark: SparkSession, dir: String, snap: Snapshot,
-      filter: Column): Vector[FileEntry] = {
-    val base = pruneFiles(snap, filter)
+      filter: Column): Vector[FileEntry] =
+    pruneExpr(spark, dir, snap, org.apache.spark.sql.GraftSqlBridge.expr(filter))
+
+  /** [[pruneFilesBloom]] over a Catalyst expression, resolved (a scan's
+    * pushed filters, see [[ManifestFileIndex]]) or not. */
+  private[table] def pruneExpr(spark: SparkSession, dir: String,
+      snap: Snapshot, e: Expression): Vector[FileEntry] = {
+    val base = pruneIntervals(snap, e)
     if (snap.bloomCols.isEmpty || base.isEmpty) return base
-    val lookups = pointLookups(filter, snap.bloomCols)
+    val lookups = pointLookups(e, snap.bloomCols)
     if (lookups.isEmpty) return base
     // MANIFEST-RESIDENT bitsets answer first (r17 verdict #4): a file
     // whose harvested blooms cover every probed column is judged
@@ -3220,8 +3272,7 @@ object ManifestTable {
       // at their own commit and pass through byte-identical
       enforce(winners, head.constraints, operation)
       val srcKeys = resolved.select(col(key))
-      val base = scanWith(spark, dir, touched, schema, head.dvs,
-        head.renames)
+      val base = scanWith(spark, dir, head, touched, schema, head.renames)
       val rewritten = base
         .join(maybeBroadcast(srcKeys), Seq(key), "left_anti")
         .unionByName(winners)
@@ -3343,7 +3394,7 @@ object ManifestTable {
       head: Snapshot, filter: Column): Snapshot = {
     val touched = pruneFilesBloom(spark, dir, head, filter)
     if (touched.isEmpty) return head
-    val rewritten = scanWith(spark, dir, touched, head.schema, head.dvs,
+    val rewritten = scanWith(spark, dir, head, touched, head.schema,
         head.renames)
       .where(!coalesce(filter, lit(false)))
     val staged = stage(spark, dir, rewritten, head.statsCols,
@@ -3374,7 +3425,7 @@ object ManifestTable {
     val touched = head.files.filter(f =>
       head.dvs.get(f.path).exists(_.nonEmpty) && only(f))
     if (touched.isEmpty) return head
-    val rewritten = scanWith(spark, dir, touched, head.schema, head.dvs,
+    val rewritten = scanWith(spark, dir, head, touched, head.schema,
         head.renames)
       .coalesce(math.max(touched.size, 1))
     val staged = stage(spark, dir, rewritten, head.statsCols,
@@ -3407,7 +3458,7 @@ object ManifestTable {
     val hit = coalesce(filter, lit(false))
     val touched = pruneFilesBloom(spark, dir, head, filter)
     if (touched.isEmpty) return head
-    val updated = scanWith(spark, dir, touched, schema, head.dvs,
+    val updated = scanWith(spark, dir, head, touched, schema,
       head.renames).where(hit)
       .select(schema.fieldNames.toSeq.map { c =>
         set.get(c).map(_.cast(schema(c).dataType).as(c)).getOrElse(col(c))
@@ -3513,8 +3564,7 @@ object ManifestTable {
     val rel = s"$DvDir/${UUID.randomUUID()}"
     val abs = new Path(dir, rel)
     val (physSchema, _) = renamePlan(head.schema, head.renames)
-    val raw = spark.read.schema(physSchema)
-      .parquet(touched.map(f => new Path(dir, f.path).toString): _*)
+    val raw = rawScan(spark, dir, head, touched, physSchema)
       .withColumn("__dv_b",
         element_at(split(col("_metadata.file_path"), "/"), -1))
       .withColumn("__dv_i", col("_metadata.row_index"))
@@ -3569,7 +3619,7 @@ object ManifestTable {
     val touched = pruneFilesBloom(spark, dir, head, filter)
     if (touched.isEmpty) return head
     val hit = coalesce(filter, lit(false))
-    val rewritten = scanWith(spark, dir, touched, schema, head.dvs,
+    val rewritten = scanWith(spark, dir, head, touched, schema,
         head.renames)
       .select(schema.fieldNames.toSeq.map { c =>
         set.get(c) match {
@@ -3579,7 +3629,7 @@ object ManifestTable {
         }
       }: _*)
     // only the rows the SET actually modified need re-checking
-    enforce(scanWith(spark, dir, touched, schema, head.dvs,
+    enforce(scanWith(spark, dir, head, touched, schema,
       head.renames).where(hit)
       .select(schema.fieldNames.toSeq.map { c =>
         set.get(c).map(_.cast(schema(c).dataType).as(c)).getOrElse(col(c))
@@ -3610,8 +3660,8 @@ object ManifestTable {
     val sb = readManifest(spark, dir, to)
     val wideSnap = if (to >= from) sb else sa
     val wide = wideSnap.schema
-    val a = scanWith(spark, dir, sa.files, wide, sa.dvs, wideSnap.renames)
-    val b = scanWith(spark, dir, sb.files, wide, sb.dvs, wideSnap.renames)
+    val a = scanWith(spark, dir, sa, sa.files, wide, wideSnap.renames)
+    val b = scanWith(spark, dir, sb, sb.files, wide, wideSnap.renames)
     val cols = wide.fieldNames.toSeq
     val ca = a.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__na"))
     val cb = b.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__nb"))
@@ -3659,9 +3709,9 @@ object ManifestTable {
     val removed = sa.files.filterNot(f => eb.get(f.path).contains(ea(f.path)))
     val added = sb.files.filterNot(f => ea.get(f.path).contains(eb(f.path)))
     val cols = wide.fieldNames.toSeq.map(col)
-    scanWith(spark, dir, removed, wide, sa.dvs, wideSnap0.renames)
+    scanWith(spark, dir, sa, removed, wide, wideSnap0.renames)
       .select(cols :+ lit("D").as("_change"): _*)
-      .unionAll(scanWith(spark, dir, added, wide, sb.dvs, wideSnap0.renames)
+      .unionAll(scanWith(spark, dir, sb, added, wide, wideSnap0.renames)
         .select(cols :+ lit("I").as("_change"): _*))
   }
 
@@ -3716,7 +3766,7 @@ object ManifestTable {
     val (small, big) = head.files.partition(f =>
       f.bytes < smallBytes && inScope(f))
     if (small.size < 2) return head
-    val df = scanWith(spark, dir, small, schema, head.dvs, head.renames)
+    val df = scanWith(spark, dir, head, small, schema, head.renames)
     val outFiles = math.max(1L,
       (small.iterator.map(_.bytes).sum + targetBytes - 1) / targetBytes).toInt
     val packed = zorderBy match {

@@ -255,8 +255,8 @@ object MergeInto {
           bySourcePaths(f.path) => f
       }
 
-      val base = ManifestTable.scanWith(spark, dir, touched, schema,
-        head.dvs, head.renames)
+      val base = ManifestTable.scanWith(spark, dir, head, touched, schema,
+        head.renames)
       val srcKeyed = resolved.select(keys.map(col) ++ Seq(
         struct(srcCols.map(col): _*).as(SrcStruct), col("__dup")): _*)
       val isMatched = col(SrcStruct).isNotNull

@@ -23,9 +23,12 @@ object ProfJobs {
 
     case class JobRec(id: Int, desc: String, start: Long, var end: Long = 0L)
     val jobs = mutable.LinkedHashMap.empty[Int, JobRec]
+    // the listener thread writes both stage maps and the main thread
+    // clears and reads them: every access holds `stageLock`
+    val stageLock = new Object
     val stageShuffle = mutable.LinkedHashMap.empty[Int, (Long, Long, Long)]
     val stageInput = mutable.LinkedHashMap.empty[Int, (Long, Long)]
-    var record = false
+    @volatile var record = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = if (record) {
         val desc = e.stageInfos.lastOption.map(s =>
@@ -39,7 +42,7 @@ object ProfJobs {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (record) {
           val m = e.stageInfo.taskMetrics
-          stageShuffle.synchronized {
+          stageLock.synchronized {
             stageShuffle(e.stageInfo.stageId) =
               (m.shuffleWriteMetrics.bytesWritten,
                 m.shuffleReadMetrics.totalBytesRead,
@@ -52,7 +55,8 @@ object ProfJobs {
     spark.sparkContext.addSparkListener(listener)
     val fn = graft.SparkEntry.queries(name)
     (1 to runs).foreach { k =>
-      jobs.clear(); stageShuffle.clear(); stageInput.clear()
+      jobs.synchronized(jobs.clear())
+      stageLock.synchronized { stageShuffle.clear(); stageInput.clear() }
       record = true
       val t0 = System.nanoTime()
       val n = fn(spark, d).count()
@@ -70,9 +74,9 @@ object ProfJobs {
         }
         val totalJob = recs.map(r => math.max(0L, r.end - r.start)).sum / 1e3
         println(f"    [sum of job walls] $totalJob%.2f s  (gaps = driver-side work: plan, commit, footer sweeps)")
-        val sh = stageShuffle.synchronized(stageShuffle.values.toVector)
+        val sh = stageLock.synchronized(stageShuffle.values.toVector)
         println(f"    [shuffle] write=${sh.map(_._1).sum / 1e6}%.1f MB read=${sh.map(_._2).sum / 1e6}%.1f MB  execRun=${sh.map(_._3).sum / 1e3}%.1f s")
-        val in = stageShuffle.synchronized(stageInput.values.toVector)
+        val in = stageLock.synchronized(stageInput.values.toVector)
         println(f"    [input] read=${in.map(_._1).sum / 1e6}%.2f MB records=${in.map(_._2).sum}%d  (a dropped duplicate scan shows here)")
       }
     }

@@ -30,6 +30,11 @@ object GraftSqlBridge {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
+  /** `schema` with every field nullable, nested ones included — what
+    * Spark's file sources read under (a file may lack a column). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Re-plan a batch frame as a STREAMING one (isStreaming = true) —
     * what a V1 `Source.getBatch` must hand the engine, and exactly how
     * the built-in file stream source wraps its batch reads: the batch

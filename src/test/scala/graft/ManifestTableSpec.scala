@@ -1458,4 +1458,134 @@ class ManifestTableSpec extends SparkSuite {
     assert(near.queryExecution.optimizedPlan.toString.contains("__dv_base"))
     assert(near.count() == 25L)
   }
+
+  /** Files the graft scans of `df`'s executed plan listed: the
+    * "number of files read" metric of every scan over a
+    * [[ManifestFileIndex]] (the DV frames are plain parquet reads and
+    * do not count). Call after an action. */
+  private def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    plans.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.relation.location.isInstanceOf[ManifestFileIndex] =>
+        s.metrics("numFiles").value
+    }.sum
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("every retained version's filtered read equals the unpruned " +
+    "reference and lists exactly the pruneFiles survivors (seeded " +
+    "histories: append, merge, DV delete, update, compact, rename, clone)") {
+    import spark.implicits._
+    Seq(11L, 23L).foreach { seed =>
+      val rng = new scala.util.Random(seed)
+      val dir = freshDir(s"prune_law_$seed")
+      def rows(ks: Seq[Long]) = ks.map(k =>
+        (k, if (k % 7 == 0) null else s"v${k % 13}")).toDF("k", "v")
+      ManifestTable.create(spark, dir,
+        rows(1L to 400L).repartitionByRange(4, col("k")), statsCols = Seq("k"))
+      var next = 401L
+      var table = dir
+      val tables = scala.collection.mutable.ArrayBuffer(dir)
+      // the value column's current name (renamed once per history)
+      def vCol = ManifestTable.snapshot(spark, table).schema.fieldNames(1)
+      val ops = rng.shuffle(Seq("append", "append", "merge", "dv", "update",
+        "compact", "rename", "clone"))
+      ops.foreach { op =>
+        val lo = 1L + rng.nextInt(next.toInt - 20)
+        op match {
+          case "append" =>
+            ManifestTable.append(spark, table,
+              rows(next until next + 60).toDF("k", vCol).coalesce(1))
+            next += 60
+          case "merge" =>
+            ManifestTable.merge(spark, table,
+              rows(lo until lo + 30).toDF("k", vCol)
+                .withColumn(vCol, concat(col(vCol), lit("m"))), "k")
+          case "dv" => ManifestTable.deleteVector(spark, table,
+            col("k").between(lo, lo + 15))
+          case "update" => ManifestTable.update(spark, table,
+            col("k").between(lo, lo + 10), Map(vCol -> lit("u")))
+          case "compact" => ManifestTable.compact(spark, table)
+          case "rename" =>
+            ManifestTable.renameColumn(spark, table, vCol, vCol + "2")
+          case "clone" =>
+            val dst = freshDir(s"prune_law_clone_$seed") + "/t"
+            ManifestTable.cloneTable(spark, table, dst)
+            table = dst
+            tables += dst
+        }
+      }
+      for (table <- tables; snap <- ManifestTable.history(spark, table)) {
+        val v = snap.version
+        val vName = snap.schema.fieldNames(1)
+        val preds = Seq(
+          col("k") === 37L,
+          col("k").between(100L, 160L),
+          col("k").isin(3L, 250L, 333L),
+          col("k").isin((200L to 211L): _*), // planned as InSet
+          col(vName).isNull,
+          col("k") === 5L || col("k") > 420L,
+          col(vName) === "v3", // the renamed column in later versions
+          col("k") > 1000000L) // matches nothing
+        val all = ManifestTable.readVersion(spark, table, v).collect()
+        val reference = spark.createDataFrame(
+          java.util.Arrays.asList(all: _*), snap.schema)
+        preds.foreach { f =>
+          val pruned = ManifestTable.readVersion(spark, table, v).where(f)
+          assert(rowsOf(pruned) == rowsOf(reference.where(f)),
+            s"seed $seed v$v ${snap.operation}: $f changed the result")
+          assert(filesRead(pruned) ==
+            ManifestTable.pruneFiles(snap, f).size.toLong,
+            s"seed $seed v$v ${snap.operation}: $f read other files than " +
+              "the manifest survivors")
+        }
+      }
+    }
+  }
+
+  test("a data file missing under a live version fails the read loudly " +
+    "(never an empty result); manifest lengths equal on-disk lengths for " +
+    "cloned, compacted and vectored files") {
+    assert(!spark.conf.get("spark.sql.files.ignoreMissingFiles").toBoolean)
+    val dir = freshDir("missing")
+    ManifestTable.create(spark, dir,
+      kv((1L to 90L).map(i => i -> s"r$i")).repartitionByRange(3, col("k")),
+      statsCols = Seq("k"))
+    ManifestTable.append(spark, dir, kv((91L to 99L).map(i => i -> "a")))
+    ManifestTable.append(spark, dir, kv((100L to 108L).map(i => i -> "b")))
+    // packs the two appended files into one
+    ManifestTable.compact(spark, dir, where = Some(col("k") > 90L))
+    ManifestTable.deleteVector(spark, dir, col("k") === 5L)
+    val clone = freshDir("missing_clone") + "/t"
+    ManifestTable.cloneTable(spark, dir, clone)
+    val v4 = ManifestTable.snapshot(spark, dir, Some(4L))
+    assert(v4.dvs.nonEmpty, "v4 reads through a deletion vector")
+    assert(v4.files.size == 4, "3 base files + 1 compacted file")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(dir, clone).foreach { d =>
+      ManifestTable.history(spark, d).flatMap(_.files).foreach { f =>
+        assert(fs.getFileStatus(new Path(d, f.path)).getLen == f.bytes,
+          s"${f.path}: manifest length must be the on-disk length")
+      }
+    }
+    assert(ManifestTable.readVersion(spark, clone, 0L).count() == 107L)
+    assert(ManifestTable.read(spark, dir).count() == 107L)
+    // delete the vectored data file listed by v4 (and by the clone)
+    val victim = v4.files.minBy(_.longBounds("k").get._1)
+    assert(v4.dvs.contains(victim.path))
+    assert(fs.delete(new Path(dir, victim.path), false))
+    Seq(ManifestTable.readVersion(spark, dir, 4L),
+      ManifestTable.readVersion(spark, clone, 0L)).foreach { df =>
+      val e = intercept[Exception](df.collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.io.FileNotFoundException]),
+        s"expected FileNotFoundException, got $e")
+    }
+    // a read whose filter prunes the missing file away never opens it
+    assert(ManifestTable.readVersion(spark, dir, 4L)
+      .where(col("k") === 95L).count() == 1L)
+  }
 }

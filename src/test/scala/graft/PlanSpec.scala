@@ -636,4 +636,22 @@ class PlanSpec extends SparkSuite {
         "expected at least two whole-stage-codegen spans")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
+
+  test("explain shows a graft scan's file-pruning decision (time travel " +
+    "included)") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("plan_prune").toString
+    graft.table.ManifestTable.create(spark, dir,
+      spark.range(0, 400).selectExpr("id AS k").repartitionByRange(4, col("k")),
+      statsCols = Seq("k"))
+    graft.table.ManifestTable.append(spark, dir, spark.range(400, 410)
+      .selectExpr("id AS k"))
+    val df = graft.table.ManifestTable.readVersion(spark, dir, 0L)
+      .where(col("k") === 5L)
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(5L))
+    val out = new java.io.ByteArrayOutputStream
+    Console.withOut(out)(df.explain(true))
+    assert(out.toString.contains(s"ManifestFileIndex[$dir@v0: kept 1 of 4 files]"),
+      s"explain must show the pruning decision:\n$out")
+  }
 }

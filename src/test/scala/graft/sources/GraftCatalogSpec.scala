@@ -365,4 +365,34 @@ class GraftCatalogSpec extends SparkSuite {
     assert(d1.getAs[Long]("replay_len") == 0L ||
       d1.getAs[Long]("replay_len") == 1L)
   }
+
+  test("an aborted CTAS deletes exactly its stage dir: no bytes remain " +
+    "under the table dir and no table appears") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.connector.catalog.{Identifier, SupportsWrite}
+    import org.apache.spark.sql.connector.write.V1Write
+    val root = java.nio.file.Files.createTempDirectory("gcat_abort")
+    root.toFile.deleteOnExit()
+    val cat = new GraftCatalog
+    cat.initialize("abort", new org.apache.spark.sql.util
+      .CaseInsensitiveStringMap(Map("warehouse" -> root.toString).asJava))
+    val data = spark.range(50).selectExpr("id AS k", "id * 2 AS v")
+    val staged = cat.stageCreate(Identifier.of(Array.empty[String], "t"),
+      data.schema, Array.empty, Map("option.statsCols" -> "k").asJava)
+    staged.asInstanceOf[SupportsWrite].newWriteBuilder(null).build()
+      .asInstanceOf[V1Write].toInsertableRelation.insert(data, false)
+    val tableDir = root.resolve("t")
+    def bytesUnder(p: java.nio.file.Path): Long =
+      if (!java.nio.file.Files.exists(p)) 0L
+      else {
+        val walk = java.nio.file.Files.walk(p)
+        try walk.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(java.nio.file.Files.size).sum
+        finally walk.close()
+      }
+    assert(bytesUnder(tableDir) > 0L, "the write must have staged data")
+    staged.abortStagedChanges()
+    assert(bytesUnder(tableDir) == 0L, "an aborted CTAS must leave no bytes")
+    assert(ManifestTable.latestVersion(spark, tableDir.toString).isEmpty)
+  }
 }
