@@ -3,6 +3,7 @@ package graft.table
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
@@ -14,6 +15,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import org.apache.spark.SparkEnv
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Or => COr}
@@ -195,7 +198,7 @@ object ManifestTable {
     * manifest-resident copy of the file's parquet bloom filters
     * (column → one entry per row group, None = that row group wrote no
     * testable filter), harvested at commit time when the file's total
-    * bitset bytes fit `spark.graft.bloom.manifestBudgetBytes` — a
+    * bitset bytes fit [[bloomManifestBudgetBytes]] — a
     * needle plan then probes straight from the snapshot with ZERO
     * footer IO; files without resident state (pre-spec, or over
     * budget) keep the footer path. Advisory metadata: a reader that
@@ -1206,9 +1209,8 @@ object ManifestTable {
           if (total <= bloomBudget) m
           else {
             log.info(s"bloom harvest skipped for $p: $total bitset bytes " +
-              s"exceed the ${bloomBudget}B per-file budget " +
-              "(spark.graft.bloom.manifestBudgetBytes) — the file keeps " +
-              "the footer probe path")
+              s"exceed the ${bloomBudget}B per-file budget — the file " +
+              "keeps the footer probe path")
             Map.empty[String, Vector[Option[BloomBits]]]
           }
         }
@@ -1303,16 +1305,14 @@ object ManifestTable {
     FileEntry(s"$rel/$sub", rows, len, stats, parts, rgs, blooms)
   }
 
-  /** Staged-file count above which the commit footer sweep runs as a
-    * Spark job instead of the driver pool (`<= 0` pins the driver
-    * path). Session-settable:
-    * `spark.graft.commit.sweepDistributeThreshold`. The default keeps
-    * metadata-sized commits jobless while routing a many-thousand-file
-    * overwrite's sweep onto the executors. */
-  @volatile private[graft] var sweepDistributeThreshold: Int = 64
-  /** Staged files swept executor-side (spec hook for the routing law). */
-  private[graft] val sweepDistributedFiles = new java.util.concurrent.atomic.AtomicLong
-
+  /** Writes `df` under `dir/rel` and returns one manifest entry per
+    * non-empty staged file. The footer sweep that reads each file's
+    * rows, stats and row-group bounds runs through [[footerFanOut]]
+    * (driver pool for metadata-sized commits, one Spark job past
+    * [[footerPoolMax]] files) under a 600 s-floored deadline: a file
+    * unresolved at it fails the commit loudly, since the stats ARE the
+    * commit's metadata (nothing is published; staged bytes are
+    * vacuumable). */
   private[table] def stage(spark: SparkSession, dir: String, df: DataFrame,
       statsCols: Seq[String], partitionCols: Seq[String],
       bloomCols: Seq[String] = Nil,
@@ -1340,9 +1340,7 @@ object ManifestTable {
     // (<= 0 disables harvesting; files over budget keep the footer
     // probe path) — resolved once so both sweep routes agree
     val bloomBudget =
-      if (presentBloomCols.isEmpty) 0
-      else intConf(spark, "spark.graft.bloom.manifestBudgetBytes",
-        bloomManifestBudgetBytes)
+      if (presentBloomCols.isEmpty) 0 else bloomManifestBudgetBytes
     val out = rightSized(spark, df)
     if (partitionCols.isEmpty)
       out.write.options(bloomOpts).parquet(abs.toString)
@@ -1366,76 +1364,18 @@ object ManifestTable {
         found += st
     }
     val sealed0 = found.result().sortBy(_.getPath.toString)
-    // footer sweep: metadata-sized but LATENCY-bound (one footer open
-    // per file). Small commits sweep on a small driver pool (pays
-    // max(latency), not sum(latency), with a BOUNDED await — one hung
-    // remote footer must fail the commit loudly, never stall it
-    // forever; unlike pruning there is no conservative fallback, the
-    // stats ARE the commit's metadata). Past the distribute threshold
-    // the sweep runs as one Spark job instead (guide §5: the driver
-    // should do almost no data work) — a 10⁵-file overwrite would
-    // otherwise serialize 10⁵ remote footer opens through ≤8 driver
-    // threads; executor-side the sweep pays max(task latency) across
-    // the cluster, failures propagate through Spark's own retry/abort
-    // machinery, and only (path, len) pairs + FileEntry metadata cross
-    // the wire.
-    val sweepThreshold = intConf(spark,
-      "spark.graft.commit.sweepDistributeThreshold", sweepDistributeThreshold)
-    val entries = if (sweepThreshold > 0 && sealed0.size > sweepThreshold) {
-      val hconf = new org.apache.spark.util.SerializableConfiguration(c)
-      val items = sealed0.map(st => (st.getPath.toString, st.getLen))
-      val slices = math.max(1, math.min(items.size,
-        spark.sparkContext.defaultParallelism * 4))
-      val prevDesc = spark.sparkContext.getLocalProperty("spark.job.description")
-      spark.sparkContext.setJobDescription(
-        s"graft: commit footer sweep of ${items.size} staged files")
-      try {
-        // same bounded-await-loud-failure semantics as the driver-pool
-        // branch below: one hung remote footer open must fail the
-        // commit, never stall it forever (r17 ADVICE — Spark has no
-        // default task timeout, so the job machinery alone is unbounded)
-        val deadlineMs = math.max(600000L, 2000L * items.size)
-        boundedDistributedJob(spark,
-          s"graft: commit footer sweep of ${items.size} staged files",
-          deadlineMs) {
-          spark.sparkContext.parallelize(items, slices)
-            .map { case (p, len) =>
-              sweepEntry(hconf.value, absQ, rel, p, len, statsCols,
-                presentBloomCols, bloomBudget)
-            }.collect().toVector
-        } match {
-          case Some(out) =>
-            sweepDistributedFiles.addAndGet(items.size.toLong)
-            out
-          case None => throw new IllegalStateException(
-            s"stage: distributed footer sweep of ${items.size} staged " +
-              s"files did not complete within $deadlineMs ms — job group " +
-              "cancelled, failing the commit loudly (nothing was " +
-              "published; staged bytes are vacuumable)")
-        }
-      } finally spark.sparkContext.setJobDescription(prevDesc)
-    } else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.{Duration, MILLISECONDS}
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(8, sealed0.size)))
-      val sweepDeadline = Duration(
-        math.max(600000L, 2000L * sealed0.size), MILLISECONDS)
-      try {
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val fut = Future.traverse(sealed0.toVector) { st => Future {
-          sweepEntry(c, absQ, rel, st.getPath.toString, st.getLen,
-            statsCols, presentBloomCols, bloomBudget)
-        }}
-        try Await.result(fut, sweepDeadline)
-        catch { case _: java.util.concurrent.TimeoutException =>
-          throw new IllegalStateException(
-            s"stage: footer sweep of ${sealed0.size} staged files did not " +
-              s"complete within $sweepDeadline — failing the commit " +
-              "loudly (nothing was published; staged bytes are vacuumable)")
-        }
-      } finally pool.shutdown()
+    val hconf = new org.apache.spark.util.SerializableConfiguration(c)
+    val swept = footerFanOut(spark, "commit footer sweep",
+      sealed0.map(st => (st.getPath.toString, st.getLen)), 600000L,
+      "failing the commit") { case (p, len) =>
+      sweepEntry(hconf.value, absQ, rel, p, len, statsCols,
+        presentBloomCols, bloomBudget)
     }
+    if (swept.exists(_.isEmpty)) throw new IllegalStateException(
+      s"stage: footer sweep of ${swept.size} staged files did not complete " +
+        "within its deadline — failing the commit loudly (nothing was " +
+        "published; staged bytes are vacuumable)")
+    val entries = swept.flatten
     // zero-row part files (an empty shuffle partition the writer still
     // materialized) carry no data AND no stats — listing them would
     // make every later stats-pruned operation treat them as unbounded
@@ -2849,16 +2789,11 @@ object ManifestTable {
     * parquet-native bloom filters in its footer? At most one footer
     * open per (file, column) per process ([[bloomCache]]), no data IO.
     * Conservative: a row group without a testable bloom keeps the
-    * file. */
-  private def bloomMayContain(c: Configuration, p: Path, column: String,
-      values: Seq[Any]): Boolean =
-    bloomProbeCounted(c, p, column, values)._1
-
-  /** [[bloomMayContain]] plus the number of footer opens this probe
-    * paid (0 on a cache hit): the distributed path ships the count back
-    * with the per-file boolean so the driver-side [[bloomFooterOpens]]
-    * law stays observable OFF local mode too (r17 ADVICE — caches and
-    * counters live per executor JVM there). */
+    * file. Also returns the footer opens this probe paid (0 on a cache
+    * hit): an executor-side probe ships the count back so the
+    * driver-side [[bloomFooterOpens]] law stays observable OFF local
+    * mode too (r17 ADVICE — caches and counters live per executor JVM
+    * there). */
   private def bloomProbeCounted(c: Configuration, p: Path, column: String,
       values: Seq[Any]): (Boolean, Int) = {
     val key = (p.toString, column)
@@ -2876,46 +2811,100 @@ object ManifestTable {
     }, opens)
   }
 
-  /** Session int conf with a LOUD fallback: an unparsable value (e.g.
-    * "10k") logs a warning and uses the default instead of silently
-    * routing the caller onto the other code path (r17 ADVICE). */
-  private def intConf(spark: SparkSession, key: String, dflt: Int): Int =
-    spark.conf.getOption(key) match {
-      case None => dflt
-      case Some(v) => scala.util.Try(v.trim.toInt).getOrElse {
-        log.warn(s"ignoring unparsable $key='$v' — using default $dflt")
-        dflt
-      }
-    }
+  /** Items above which [[footerFanOut]] runs as one Spark job instead
+    * of the driver pool. Spec seam: only the routing specs move it. */
+  @volatile private[table] var footerPoolMax: Int = 64
+  /** Items [[footerFanOut]] handed to a Spark job (spec hook for the
+    * routing laws). */
+  private[graft] val footerJobItems = new java.util.concurrent.atomic.AtomicLong
 
-  /** Runs `body` (a job-submitting action) on a side thread under a
-    * driver-side DEADLINE: past it the job group is cancelled and None
-    * returns. Spark has no default task timeout and speculation is off
-    * by default, so one hung remote footer open would otherwise stall
-    * the calling distributed probe/sweep forever (r17 ADVICE — the
-    * driver-pool paths already had exactly this bound). The side thread
-    * inherits the caller's local properties (InheritableThreadLocal),
-    * and the job-group tag set inside it stays scoped to that thread;
-    * the group id is unique per call, so the cancel can never hit an
-    * unrelated job. */
-  private def boundedDistributedJob[T](spark: SparkSession, desc: String,
-      deadlineMs: Long)(body: => T): Option[T] = {
-    val groupId = s"graft-bounded-${UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+  /** The one bounded fan-out for per-file footer IO (the commit sweep
+    * and the bloom footer probe): applies `f` to every item and returns
+    * one result per item, None = still unresolved at the deadline.
+    * Footer opens are metadata-sized but LATENCY-bound, so up to
+    * [[footerPoolMax]] items run on a min(8, n)-thread driver pool
+    * (pays max(latency), not the sum) under a `floorMs` deadline. Above
+    * it they run as ONE Spark job (the driver must not serialize 10⁵
+    * remote footer opens through ≤8 threads) under a deadline of
+    * max(`floorMs`, 2 s per task-slot wave), counted from the job's
+    * FIRST TASK LAUNCH: a job queued behind other work is not hung.
+    * Spark has no default task timeout, so past the deadline the call's
+    * unique job group is cancelled and every item is None. An exception
+    * from `f` or the job propagates; `onDeadline` names what the caller
+    * does with unresolved items (logged). */
+  private def footerFanOut[A: ClassTag, B: ClassTag](spark: SparkSession,
+      what: String, items: Vector[A], floorMs: Long, onDeadline: String)(
+      f: A => B): Vector[Option[B]] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.{Duration, MILLISECONDS}
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val fut = Future {
-        spark.sparkContext.setJobGroup(groupId, desc, interruptOnCancel = true)
-        try body finally spark.sparkContext.clearJobGroup()
+    import java.util.concurrent.{CountDownLatch, Executors, TimeoutException}
+    val n = items.size
+    def warn(unresolved: Int, deadlineMs: Long): Unit =
+      log.warn(s"$what: $unresolved of $n files unresolved at the " +
+        s"$deadlineMs ms deadline — $onDeadline")
+    if (n <= footerPoolMax) {
+      val pool = Executors.newFixedThreadPool(math.max(1, math.min(8, n)))
+      try {
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        val futs = items.map(a => Future(f(a)))
+        val deadline = System.nanoTime() + floorMs * 1000000L
+        val out = futs.map { fut =>
+          val left = math.max(1L, (deadline - System.nanoTime()) / 1000000L)
+          try Some(Await.result(fut, Duration(left, MILLISECONDS)))
+          catch { case _: TimeoutException => None }
+        }
+        val unresolved = out.count(_.isEmpty)
+        if (unresolved > 0) warn(unresolved, floorMs)
+        out
+      } finally pool.shutdown()
+    } else {
+      val sc = spark.sparkContext
+      val par = math.max(1, sc.defaultParallelism)
+      val deadlineMs = math.max(floorMs, 2000L * ((n + par - 1) / par))
+      log.info(s"$what: $n files as one Spark job, deadline $deadlineMs ms " +
+        "from its first task launch")
+      footerJobItems.addAndGet(n.toLong)
+      val groupId = s"graft-footer-${UUID.randomUUID()}"
+      // released by the group's first task launch, or by the job's end
+      val launched = new CountDownLatch(1)
+      val listener = new SparkListener {
+        private var stages = Set.empty[Int] // listener-bus thread only
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == groupId)
+            stages ++= e.stageIds
+        override def onTaskStart(e: SparkListenerTaskStart): Unit =
+          if (stages.contains(e.stageId)) launched.countDown()
       }
-      try Some(Await.result(fut, Duration(deadlineMs, MILLISECONDS)))
-      catch { case _: java.util.concurrent.TimeoutException =>
-        spark.sparkContext.cancelJobGroup(groupId)
-        None
+      val pool = Executors.newSingleThreadExecutor()
+      var finished = false
+      sc.addSparkListener(listener)
+      try {
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        // the side thread inherits the caller's local properties; the
+        // job group set inside it stays scoped to that thread
+        val fut = Future {
+          sc.setJobGroup(groupId, s"graft: $what of $n files",
+            interruptOnCancel = true)
+          try sc.parallelize(items, math.min(n, par * 4)).map(f)
+            .collect().toVector
+          finally { sc.clearJobGroup(); launched.countDown() }
+        }
+        launched.await()
+        val out =
+          try Await.result(fut, Duration(deadlineMs, MILLISECONDS)).map(Some(_))
+          catch { case _: TimeoutException =>
+            warn(n, deadlineMs)
+            Vector.fill(n)(None)
+          }
+        finished = out.forall(_.nonEmpty)
+        out
+      } finally {
+        if (!finished) sc.cancelJobGroup(groupId)
+        sc.removeSparkListener(listener)
+        pool.shutdown()
       }
-    } finally pool.shutdown()
+    }
   }
 
   /** [[pruneFiles]] + parquet-native BLOOM consultation: files whose
@@ -2927,10 +2916,11 @@ object ManifestTable {
     * one footer open per admitted file (parallel, metadata IO only),
     * and the filter is re-applied on every scanned row, so — like all
     * pruning here — a bloom can only skip IO, never change results.
-    * Small admitted sets probe on a bounded driver pool (cached,
-    * deadline-guarded); past [[bloomDistributeThreshold]] files the
-    * probe runs as one Spark job so the driver never serializes 10⁵
-    * footer opens ([[pruneFilesBloomDistributed]]). */
+    * Files without manifest-resident bitsets are probed through
+    * [[footerFanOut]] (a driver pool, or one Spark job past
+    * [[footerPoolMax]] files; footers cached per process). A file whose
+    * probe errs, or is unresolved at the `bloomProbeTimeoutMs`-floored
+    * deadline, is KEPT (a deadline hit is counted and logged). */
   def pruneFilesBloom(spark: SparkSession, dir: String, snap: Snapshot,
       filter: Column): Vector[FileEntry] =
     pruneExpr(spark, dir, snap, org.apache.spark.sql.GraftSqlBridge.expr(filter))
@@ -2949,7 +2939,7 @@ object ManifestTable {
     // table's needle plan pays no per-file RPC at ANY table size, even
     // fully cold. Files without resident state (pre-spec generations,
     // or over the harvest byte budget at commit time) keep the footer
-    // path below, routed driver-pool vs distributed exactly as before.
+    // path below.
     val residentKeep: Map[String, Boolean] = base.iterator
       .filter(f => lookups.keysIterator.forall(f.blooms.contains))
       .map { f =>
@@ -2962,130 +2952,42 @@ object ManifestTable {
         }
       }.toMap
     val needFooter = base.filterNot(f => residentKeep.contains(f.path))
-    def fuse(footerKeep: Map[String, Boolean]): Vector[FileEntry] =
-      base.filter(f => residentKeep.getOrElse(f.path,
-        footerKeep.getOrElse(f.path, true)))
-    if (needFooter.isEmpty) return fuse(Map.empty)
-    val threshold = intConf(spark, "spark.graft.bloom.distributeThreshold",
-      bloomDistributeThreshold)
-    if (threshold > 0 && needFooter.size > threshold)
-      return fuse(pruneFilesBloomDistributed(spark, dir, needFooter, lookups))
-    val c = conf(spark)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.{Duration, MILLISECONDS}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(8, needFooter.size)))
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val futs = needFooter.map { f => f -> Future {
-        if (bloomProbeDelayMs > 0) Thread.sleep(bloomProbeDelayMs.toLong)
-        lookups.forall { case (column, values) =>
-          bloomMayContain(c, new Path(dir, f.path), column, values)
-        }
-      }}
-      // BOUNDED await: one hung remote footer open must not stall the
-      // plan forever — past the deadline every unresolved probe falls
-      // back to conservative KEEP (a kept file is always correct; the
-      // filter is re-applied on scan), logged and counted.
-      val deadline = System.nanoTime() + bloomProbeTimeoutMs * 1000000L
-      fuse(futs.map { case (f, fut) =>
-        val left = math.max(1L, (deadline - System.nanoTime()) / 1000000L)
-        f.path -> (try Await.result(fut, Duration(left, MILLISECONDS))
-        catch { case _: java.util.concurrent.TimeoutException =>
-          bloomProbeTimeouts.incrementAndGet()
-          log.warn(s"bloom probe timed out for ${f.path} after " +
-            s"${bloomProbeTimeoutMs} ms — keeping the file (pruning is " +
-            "advisory, the filter re-applies on scan)")
-          true
-        })
-      }.toMap)
-    } finally pool.shutdown()
-  }
-
-  /** The DISTRIBUTED twin of the driver-pool probe: one Spark job whose
-    * tasks open the admitted files' footers EXECUTOR-side and ship back
-    * one boolean per file. Routing point: above
-    * [[bloomDistributeThreshold]] admitted files the driver pool is the
-    * wrong place to pay footer latency (guide §5 — the driver should do
-    * almost no data work): a needle on a 10⁵-file unsorted table would
-    * serialize ~10⁵ remote footer opens through ≤8 driver threads,
-    * while a job pays max(task latency) across the cluster and each
-    * executor keeps its own [[bloomCache]] for repeats. Only relative
-    * paths + the pinned lookup values cross the wire — never bloom
-    * bytes — so the manifest/driver stay O(files). Conservative like
-    * every pruning path: a per-file probe error KEEPS that file, and a
-    * job-level failure degrades to interval-only pruning (the filter
-    * re-applies on every scanned row, so survivors-only-grow is always
-    * correct). */
-  private def pruneFilesBloomDistributed(spark: SparkSession, dir: String,
-      base: Vector[FileEntry],
-      lookups: Map[String, Seq[Any]]): Map[String, Boolean] = {
+    if (needFooter.isEmpty) return base.filter(f => residentKeep(f.path))
+    // only relative paths + the pinned values cross the wire, never
+    // bloom bytes; footer opens paid in another JVM ship back (local
+    // mode shares the JVM, so they are already counted)
     val hconf = new org.apache.spark.util.SerializableConfiguration(conf(spark))
-    val paths = base.map(_.path)
-    val slices = math.max(1, math.min(paths.size,
-      spark.sparkContext.defaultParallelism * 4))
     val delay = bloomProbeDelayMs
-    val prevDesc = spark.sparkContext.getLocalProperty("spark.job.description")
-    spark.sparkContext.setJobDescription(
-      s"graft: bloom probe of ${paths.size} admitted files")
-    try {
-      // deadline mirroring the driver-pool batch budget: 2 s per serial
-      // task-slot wave, floored at bloomProbeTimeoutMs — bounded even
-      // when one remote footer open hangs (Spark has no task timeout)
-      val par = math.max(1, spark.sparkContext.defaultParallelism)
-      val deadlineMs = math.max(bloomProbeTimeoutMs,
-        2000L * ((paths.size + par - 1) / par))
-      val collected = boundedDistributedJob(spark,
-        s"graft: bloom probe of ${paths.size} admitted files", deadlineMs) {
-        spark.sparkContext.parallelize(paths, slices).map { rel =>
-          if (delay > 0) Thread.sleep(delay.toLong)
-          rel -> (try {
-            var opens = 0
-            val keep = lookups.forall { case (column, values) =>
-              val (k, o) = bloomProbeCounted(hconf.value,
-                new Path(dir, rel), column, values)
-              opens += o; k
-            }
-            (keep, opens)
-          } catch { case NonFatal(_) => (true, 0) })
-        }.collect()
-      }
-      collected match {
-        case Some(arr) =>
-          bloomDistributedProbes.addAndGet(paths.size.toLong)
-          // off local mode the executors' footer opens are invisible to
-          // this JVM — fold the shipped counts into the driver counter
-          // (local mode shares the JVM, so they are already counted)
-          if (!spark.sparkContext.isLocal)
-            bloomFooterOpens.addAndGet(arr.iterator.map(_._2._2.toLong).sum)
-          arr.iterator.map { case (r, (k, _)) => r -> k }.toMap
-        case None =>
-          bloomProbeTimeouts.incrementAndGet()
-          log.warn(s"distributed bloom probe of ${paths.size} files hit " +
-            s"its $deadlineMs ms deadline — job group cancelled, " +
-            "degrading to interval-only pruning (a kept file is always " +
-            "correct; the filter re-applies on scan)")
-          Map.empty
-      }
+    val probed = try footerFanOut(spark, "bloom footer probe",
+      needFooter.map(_.path), bloomProbeTimeoutMs,
+      "keeping them (pruning is advisory, the filter re-applies on scan)") {
+      rel =>
+        if (delay > 0) Thread.sleep(delay.toLong)
+        try {
+          var opens = 0
+          val keep = lookups.forall { case (column, values) =>
+            val (k, o) = bloomProbeCounted(hconf.value, new Path(dir, rel),
+              column, values)
+            opens += o; k
+          }
+          (keep, if (SparkEnv.get.executorId == "driver") 0 else opens)
+        } catch { case NonFatal(_) => (true, 0) }
     } catch { case NonFatal(e) =>
-      log.warn(s"distributed bloom probe of ${paths.size} files failed — " +
-        "degrading to interval-only pruning (a kept file is always " +
-        s"correct; the filter re-applies on scan): " +
-        s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      Map.empty
-    } finally spark.sparkContext.setJobDescription(prevDesc)
+      log.warn(s"bloom footer probe of ${needFooter.size} files failed — " +
+        "keeping them (pruning is advisory, the filter re-applies on " +
+        s"scan): ${e.getClass.getSimpleName}: ${e.getMessage}")
+      needFooter.map(_ => Some((true, 0)))
+    }
+    if (probed.exists(_.isEmpty)) bloomProbeTimeouts.incrementAndGet()
+    bloomFooterOpens.addAndGet(probed.iterator.flatten.map(_._2.toLong).sum)
+    val footerKeep = needFooter.iterator.map(_.path)
+      .zip(probed.iterator.map(_.forall(_._1))).toMap
+    base.filter(f => residentKeep.getOrElse(f.path, footerKeep(f.path)))
   }
-
-  /** Admitted-file count above which [[pruneFilesBloom]] probes via a
-    * Spark job instead of the driver pool (`<= 0` pins the driver
-    * path). Session-settable: `spark.graft.bloom.distributeThreshold`.
-    * The default keeps fixture-scale point plans jobless while routing
-    * the 10⁵-admitted-file case off the driver. */
-  @volatile private[graft] var bloomDistributeThreshold: Int = 256
 
   /** Per-FILE byte budget for copying a staged file's bloom bitsets
-    * into the manifest (r17 verdict #4; session-settable:
-    * `spark.graft.bloom.manifestBudgetBytes`, `<= 0` disables).
+    * into the manifest (r17 verdict #4; spec-settable, `<= 0`
+    * disables).
     * Sizing math behind the default: with adaptive write sizing a
     * 64 KB bitset covers ~55 k distinct keys per file at the 1 % fpp
     * target, and a fully-harvested 10⁵-file table costs the driver at
@@ -3093,18 +2995,15 @@ object ManifestTable {
     * trades first-probe footer RPCs against log/snapshot bytes, and
     * files over it keep the (cached, distributable) footer path. */
   @volatile private[graft] var bloomManifestBudgetBytes: Int = 64 * 1024
-  /** Files probed executor-side (spec hook for the routing law). */
-  private[graft] val bloomDistributedProbes = new java.util.concurrent.atomic.AtomicLong
 
-  /** Per-plan budget for the WHOLE bloom probe batch (the probes run in
-    * parallel; a batch that exceeds it degrades to interval-only
-    * pruning for the unresolved files). Spec-settable. Applies to the
-    * DRIVER-pool path; the distributed path is bounded by Spark's own
-    * task/job machinery instead. */
+  /** Per-plan budget for the WHOLE bloom footer probe batch (the probes
+    * run in parallel; unresolved files are kept). Spec-settable. It is
+    * the driver pool's deadline and the floor of the job route's. */
   @volatile private[graft] var bloomProbeTimeoutMs: Long = 30000L
   /** Fault-injection seam (spec-only): artificial per-probe latency. */
   @volatile private[graft] var bloomProbeDelayMs: Int = 0
-  /** Probes that hit the deadline and fell back to KEEP. */
+  /** Probe batches that hit the deadline and kept their unresolved
+    * files. */
   private[graft] val bloomProbeTimeouts = new java.util.concurrent.atomic.AtomicLong
 
   // --------------------------------------------------------- merge

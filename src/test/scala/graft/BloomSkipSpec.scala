@@ -1,6 +1,10 @@
 package graft.table
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
 import graft.SparkSuite
+import org.apache.spark.JobExecutionStatus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.functions._
 
 /** Laws of parquet-native BLOOM file skipping (round-16 verdict #3):
@@ -168,32 +172,22 @@ class BloomSkipSpec extends SparkSuite {
     // reference survivors from the driver-pool path (threshold above
     // the admitted count)
     ManifestTable.clearBloomCache()
-    val saved = ManifestTable.bloomDistributeThreshold
+    val saved = ManifestTable.footerPoolMax
     try {
-      ManifestTable.bloomDistributeThreshold = 1000
+      ManifestTable.footerPoolMax = 1000
       val viaDriver = ManifestTable.pruneFilesBloom(spark, dir, snap, probe)
-      val jobProbes0 = ManifestTable.bloomDistributedProbes.get()
+      val jobProbes0 = ManifestTable.footerJobItems.get()
       // now force the distributed route for the same 40-file probe
-      ManifestTable.bloomDistributeThreshold = 8
+      ManifestTable.footerPoolMax = 8
       ManifestTable.clearBloomCache()
       val viaJob = ManifestTable.pruneFilesBloom(spark, dir, snap, probe)
-      assert(ManifestTable.bloomDistributedProbes.get() - jobProbes0 == 40L,
+      assert(ManifestTable.footerJobItems.get() - jobProbes0 == 40L,
         "the routed probe must be counted (one per admitted file)")
       assert(viaJob.map(_.path) == viaDriver.map(_.path),
         "distributed and driver-pool probes must keep the SAME files")
       assert(viaJob.nonEmpty && viaJob.size <= 3)
       assert(ManifestTable.read(spark, dir, probe).count() == 1L)
-      // session conf overrides the default; <= 0 pins the driver path
-      spark.conf.set("spark.graft.bloom.distributeThreshold", "0")
-      try {
-        val jobProbes1 = ManifestTable.bloomDistributedProbes.get()
-        val pinned = ManifestTable.pruneFilesBloom(spark, dir, snap,
-          col("id") === 777L)
-        assert(ManifestTable.bloomDistributedProbes.get() == jobProbes1,
-          "threshold <= 0 must never route through a job")
-        assert(pinned.nonEmpty && pinned.size <= 3)
-      } finally spark.conf.unset("spark.graft.bloom.distributeThreshold")
-    } finally ManifestTable.bloomDistributeThreshold = saved
+    } finally ManifestTable.footerPoolMax = saved
   }
 
   test("manifest-resident blooms (r18): a fully-harvested table answers " +
@@ -273,5 +267,115 @@ class BloomSkipSpec extends SparkSuite {
       ManifestTable.bloomProbeTimeoutMs = savedT
       ManifestTable.bloomProbeDelayMs = savedD
     }
+  }
+
+  /** Two files, even ids then odd ids (one commit each), blooms in the
+    * footers only: both files' [min, max] admit any needle. */
+  private def seedTwoStriped(dir: String): Unit = {
+    import spark.implicits._
+    def half(r: Long) = (0L until 4000L).filter(_ % 2 == r)
+      .map(i => (i, s"v$i")).toDF("id", "v").coalesce(1)
+    val saved = ManifestTable.bloomManifestBudgetBytes
+    ManifestTable.bloomManifestBudgetBytes = 0
+    try {
+      ManifestTable.create(spark, dir, half(0), statsCols = Seq("id"),
+        bloomCols = Seq("id"))
+      ManifestTable.append(spark, dir, half(1))
+    } finally ManifestTable.bloomManifestBudgetBytes = saved
+  }
+
+  /** Runs `body` with the footer probe forced onto the Spark-job route
+    * and the given probe deadline floor / per-file delay. */
+  private def viaJob[T](timeoutMs: Long, delayMs: Int)(body: => T): T = {
+    val saved = (ManifestTable.footerPoolMax,
+      ManifestTable.bloomProbeTimeoutMs, ManifestTable.bloomProbeDelayMs)
+    ManifestTable.footerPoolMax = 0
+    ManifestTable.bloomProbeTimeoutMs = timeoutMs
+    ManifestTable.bloomProbeDelayMs = delayMs
+    try body finally {
+      ManifestTable.footerPoolMax = saved._1
+      ManifestTable.bloomProbeTimeoutMs = saved._2
+      ManifestTable.bloomProbeDelayMs = saved._3
+    }
+  }
+
+  /** Polls `cond` every 20 ms for up to `ms`. */
+  private def awaitCond(ms: Long)(cond: => Boolean): Boolean = {
+    val end = System.nanoTime() + ms * 1000000L
+    while (!cond && System.nanoTime() < end) Thread.sleep(20)
+    cond
+  }
+
+  test("the job route's deadline starts at its first task launch: a " +
+    "probe queued behind a job holding every slot still prunes") {
+    val dir = freshDir("queued")
+    seedTwoStriped(dir)
+    val snap = ManifestTable.snapshot(spark, dir)
+    val probe = col("id") === 1234L
+    assert(ManifestTable.pruneFiles(snap, probe).size == 2,
+      "striped ids must admit the needle in both files")
+    val sc = spark.sparkContext
+    // hold all 4 local[4] slots for 3 s — longer than the 2 s deadline
+    // (max(500 ms, 2 s × 1 wave)) the probe job gets
+    val slotsHeld = new CountDownLatch(4)
+    val listener = new SparkListener {
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        slotsHeld.countDown()
+    }
+    sc.addSparkListener(listener)
+    val blocker = new Thread(() =>
+      sc.parallelize(1 to 4, 4).foreach(_ => Thread.sleep(3000)))
+    blocker.start()
+    try {
+      assert(slotsHeld.await(10, TimeUnit.SECONDS),
+        "the blocker must hold every slot before the probe is submitted")
+      ManifestTable.clearBloomCache()
+      val timeouts0 = ManifestTable.bloomProbeTimeouts.get()
+      val kept = viaJob(timeoutMs = 500L, delayMs = 0) {
+        ManifestTable.pruneFilesBloom(spark, dir, snap, probe)
+      }
+      assert(ManifestTable.bloomProbeTimeouts.get() == timeouts0,
+        "queueing behind another job must not count as a timeout")
+      assert(kept.size == 1 &&
+        kept.head.longBounds("id").exists(_._1 % 2 == 1234L % 2),
+        s"only the file holding the needle may survive, kept $kept")
+    } finally { sc.removeSparkListener(listener); blocker.join() }
+  }
+
+  test("a hung job-route probe hits its deadline: every file kept, one " +
+    "timeout counted, and the job group left with no running job") {
+    val dir = freshDir("job_timeout")
+    seedTwoStriped(dir)
+    val snap = ManifestTable.snapshot(spark, dir)
+    val probe = col("id") === 1234L
+    val sc = spark.sparkContext
+    @volatile var group: String = null
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .filter(g => g != null && g.startsWith("graft-footer-"))
+          .foreach(group = _)
+    }
+    sc.addSparkListener(listener)
+    try {
+      ManifestTable.clearBloomCache()
+      val timeouts0 = ManifestTable.bloomProbeTimeouts.get()
+      // deadline max(50 ms, 2 s × 1 wave) = 2 s < the 4 s per-file delay
+      val kept = viaJob(timeoutMs = 50L, delayMs = 4000) {
+        ManifestTable.pruneFilesBloom(spark, dir, snap, probe)
+      }
+      assert(kept.size == 2,
+        "past the deadline every unresolved probe must KEEP its file")
+      assert(ManifestTable.bloomProbeTimeouts.get() - timeouts0 == 1L,
+        "one deadline hit is one timeout")
+      assert(awaitCond(5000)(group != null), "the probe ran as a job")
+      assert(awaitCond(10000) {
+        val jobs = sc.statusTracker.getJobIdsForGroup(group)
+        jobs.nonEmpty && jobs.forall(id => sc.statusTracker.getJobInfo(id)
+          .forall(_.status != JobExecutionStatus.RUNNING))
+      },
+        s"the cancelled group $group must have no running job")
+      assert(ManifestTable.read(spark, dir, probe).count() == 1L)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -85,18 +85,19 @@ class ManifestTableSpec extends SparkSuite {
     // exercises the shadow-path parsing executor-side
     def frame = (0L until 240L).map(i => (i, i % 3, s"p$i"))
       .toDF("k", "part", "v").repartition(4, col("k"))
-    val probes0 = ManifestTable.sweepDistributedFiles.get()
+    val probes0 = ManifestTable.footerJobItems.get()
     val dirDriver = freshDir("sweep_driver")
     val s1 = ManifestTable.create(spark, dirDriver, frame,
       statsCols = Seq("k"), partitionCols = Seq("part"))
-    assert(ManifestTable.sweepDistributedFiles.get() == probes0,
+    assert(ManifestTable.footerJobItems.get() == probes0,
       "below the threshold the sweep must stay on the driver pool")
     val dirJob = freshDir("sweep_job")
-    spark.conf.set("spark.graft.commit.sweepDistributeThreshold", "1")
+    val saved = ManifestTable.footerPoolMax
+    ManifestTable.footerPoolMax = 1
     val s2 = try ManifestTable.create(spark, dirJob, frame,
       statsCols = Seq("k"), partitionCols = Seq("part"))
-    finally spark.conf.unset("spark.graft.commit.sweepDistributeThreshold")
-    assert(ManifestTable.sweepDistributedFiles.get() - probes0 ==
+    finally ManifestTable.footerPoolMax = saved
+    assert(ManifestTable.footerJobItems.get() - probes0 ==
       s2.files.size.toLong, "the routed sweep must count one per file")
     assert(s1.files.size > 1 && s1.files.size == s2.files.size)
     // entries identical up to the commit-UUID path: same partition
