@@ -282,7 +282,7 @@ object ManifestTable {
   }
 
   private val LogDir = "_graft_log"
-  private val DataDir = "data"
+  private[table] val DataDir = "data"
   private val DvDir = "dv"
   private val PartPrefix = "__p_"
 
@@ -383,14 +383,6 @@ object ManifestTable {
   private[graft] def clearSnapshotCache(): Unit = snapshotCache.clear()
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Merge sources at or under this row count are BROADCAST to the
-    * rewrite join (the table side then never shuffles — the CDC fast
-    * path); above it the join degrades to a plain shuffle join with
-    * identical semantics instead of OOMing the driver on a bulk
-    * source. ~4M keyed rows is comfortably inside Spark's default 8GB
-    * broadcast-table hard cap for typical row widths. */
-  private[table] val MaxBroadcastSourceRows = 4L * 1000 * 1000
 
   private def logPath(dir: String) = new Path(dir, LogDir)
   private def deltaName(v: Long) = f"v$v%020d.json"
@@ -3012,11 +3004,19 @@ object ManifestTable {
     * rows whose `opCol` (if any) equals 'D' deleted. Only files holding
     * at least one source key (by manifest [min, max] bounds on `key` —
     * footer stats or partition values) are rewritten; the rest carry
-    * over by reference. The rewrite is a broadcast ANTI join: touched
-    * base rows whose key appears in the source are replaced, all other
-    * base rows pass through UNCHANGED (pre-existing duplicate or
-    * null-key base rows are preserved verbatim — only keys present in
-    * the source are resolved).
+    * over by reference. Which files are touched, whether the source
+    * broadcasts and which concurrent files conflict is decided by
+    * [[MergeInto.SourceProbe]], the one merge core shared with SQL
+    * MERGE INTO. The rewrite is a broadcast ANTI join: touched base
+    * rows whose key appears in the source are replaced, all other base
+    * rows pass through UNCHANGED (pre-existing duplicate or null-key
+    * base rows are preserved verbatim — only keys present in the source
+    * are resolved). That rewrite stays its own algorithm rather than
+    * MERGE INTO clauses: it is an upsert (every non-'D' source row
+    * lands, matched or not, and duplicate base rows of a source key
+    * collapse to the one winner), which as clauses would become a left
+    * join plus MERGE INTO's collect_set pass — more jobs, and a
+    * different result for duplicate base keys.
     *
     * '''Source key contract''': at most one row per key. Without
     * `seqCol` a duplicate-key source FAILS LOUDLY (raise_error inside
@@ -3082,7 +3082,6 @@ object ManifestTable {
     // (the only shuffle the source ever takes), cached; the pruning
     // probe, the anti-join key set and the winner rows are all derived
     // from this cache. One row per key with its resolved _op.
-    val obs = org.apache.spark.sql.Observation()
     val srcOp = opCol.map(col).getOrElse(lit("U"))
     val src0 = source.where(col(key).isNotNull)
     val cached = (seqCol match {
@@ -3100,65 +3099,13 @@ object ManifestTable {
             lit(" — pre-compact or pass seqCol")))).otherwise(lit(true)))
     }).select(cols.map(col) :+ srcOp.as("__op"): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // size gate on the broadcast: a CDC-sized source broadcasts (the
-    // table side then never shuffles); a bulk source above the gate
-    // falls back to a plain shuffle join — identical semantics, and no
-    // driver/executor OOM from materializing a huge source. The count
-    // RIDES the pruning probe via an observe node ABOVE the cache point
-    // (metrics inside a cached subplan never report) — no separate
-    // count() job; only a probe-less merge pays an explicit pass.
-    // the source-key RANGE rides the same observe as the row count:
-    // the rebase-conflict test then costs zero extra jobs (previously a
-    // separate one-row aggregate pass over the cached source)
-    val keyType = schema(key).dataType
-    val rangeAggs = keyProbe(keyType).toSeq.flatMap { case (_, norm) =>
-      Seq(min(norm(col(key))).as("lo"), max(norm(col(key))).as("hi")) }
-    val resolved = cached.observe(obs,
-      count(lit(1)).as("rows"), rangeAggs: _*)
-    var observed = false
-    lazy val srcRows: Long = observedRows(observed, obs, cached)
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (srcRows <= MaxBroadcastSourceRows) broadcast(df) else df
     try {
-      // Per-file pruning probe: a file is touched iff at least one
-      // source key falls inside its [min, max] bounds on the merge key
-      // (footer stats, or the exact partition value when the table is
-      // partitioned on the key; files without bounds are always
-      // touched). The probe is one range join of the source keys
-      // against the BROADCAST file-interval table (metadata-sized: one
-      // row per data file) aggregated down to ≤ |files| ints at the
-      // driver — strictly tighter than a single [lo, hi] interval,
-      // which a changelog with one far-away key (the
-      // append-plus-update batch shape) would blow up to the whole
-      // table.
-      val statFiles = head.files.zipWithIndex.flatMap { case (fe, i) =>
-        fileBounds(fe, schema, key).flatMap { case (mn, mx) =>
-          keyProbe(keyType).map { case (t, _) => (i, mn, mx, t) }
-        }
-      }
-      val touchedIdx: Set[Int] =
-        if (statFiles.isEmpty) Set.empty
-        else {
-          val t = statFiles.head._4
-          val ivalSchema = StructType(Seq(
-            StructField("__fi", IntegerType), StructField("__mn", t),
-            StructField("__mx", t)))
-          val rows = statFiles.map { case (i, mn, mx, _) =>
-            Row(i, primExternal(mn, t), primExternal(mx, t))
-          }
-          val ivals = spark.createDataFrame(rows.asJava, ivalSchema)
-          val kexpr = keyProbe(keyType).get._2(col(key))
-          val idx = resolved.select(kexpr.as("__k"))
-            .join(broadcast(ivals),
-              col("__k") >= col("__mn") && col("__k") <= col("__mx"))
-            .select("__fi").distinct().collect().map(_.getInt(0)).toSet
-          observed = true // the probe's full pass set the observe metric
-          idx
-        }
-      val boundedIdx = statFiles.map(_._1).toSet
-      val touched = head.files.zipWithIndex.collect {
-        case (f, i) if !boundedIdx(i) || touchedIdx(i) => f
-      }
+      // touched files, broadcast gate and rebase-conflict test: the
+      // merge core shared with MERGE INTO
+      val probe = new MergeInto.SourceProbe(dir, head, schema, cached,
+        Seq(key))
+      val resolved = probe.resolved
+      val touched = probe.touched
 
       // Rewrite = broadcast ANTI join (touched rows whose key appears
       // in the source are dropped) ∪ non-delete winners. The table
@@ -3173,101 +3120,19 @@ object ManifestTable {
       val srcKeys = resolved.select(col(key))
       val base = scanWith(spark, dir, head, touched, schema, head.renames)
       val rewritten = base
-        .join(maybeBroadcast(srcKeys), Seq(key), "left_anti")
+        .join(probe.maybeBroadcast(srcKeys), Seq(key), "left_anti")
         .unionByName(winners)
         .coalesce(math.max(touched.size, 1))
 
       val staged =
-        if (touched.isEmpty && srcRows == 0) Vector.empty
+        if (touched.isEmpty && probe.rows == 0) Vector.empty
         else stage(spark, dir, rewritten, head.statsCols,
           head.partitionCols, head.bloomCols)
-      // Rebase conflict test for concurrently ADDED files: overlap with
-      // the source key range ⇒ the other commit may have landed rows
-      // for keys this merge also resolved — interleaving them would
-      // leave duplicate keys, so fail loudly. Lazily priced: the
-      // happy path (no race) never runs the one-row range aggregate.
-      // Outer None = key type unboundable (every added file conflicts);
-      // inner None = empty source (nothing can conflict). The range
-      // normally arrives via the probe's observe metrics (zero extra
-      // jobs); the explicit aggregate only runs when the observation
-      // was never set (probe-less merge / AQE empty-relation replan).
-      lazy val srcRange: Option[Option[(Any, Any)]] =
-        keyProbe(keyType).map { case (_, norm) =>
-          observedMetrics(observed, obs) match {
-            case Some(m) =>
-              m.get("lo") match {
-                case Some(null) | None => None // empty source
-                case Some(lo) => Some((lo, m("hi")))
-              }
-            case None =>
-              val r = resolved.agg(min(norm(col(key))).as("lo"),
-                max(norm(col(key))).as("hi")).head()
-              if (r.isNullAt(0)) None else Some((r.get(0), r.get(1)))
-          }
-        }
-      val conflicts: FileEntry => Boolean = f => srcRange match {
-        case None => true // unboundable key type: conservative
-        case Some(None) => false // empty source: no keys to collide with
-        case Some(Some((lo, hi))) => fileBounds(f, schema, key) match {
-          case None => true // unbounded file: conservative
-          case Some((mn, mx)) =>
-            !primLt(mx, lo) && !primLt(hi, mn) // ranges intersect
-        }
-      }
       commitRewrite(spark, dir, head, operation,
-        touched.map(_.path).toSet, staged, conflicts, batchId, txnId)
+        touched.map(_.path).toSet, staged, probe.conflicts, batchId, txnId)
     } finally {
       cached.unpersist()
     }
-  }
-
-  /** The merge source's row count, preferring the observe metric the
-    * pruning probe already paid for (one pass fills the cache AND
-    * answers the broadcast gate) over a separate count() job. The
-    * fallback is load-bearing, not defensive: when the probe's result
-    * is EMPTY, AQE replans the finished stage into an empty local
-    * relation, the CollectMetricsExec vanishes from the final adaptive
-    * plan, and the ObservationManager completes the observation with
-    * Row.empty — so an absent metric falls back to one count() over
-    * the ALREADY-CACHED source (the pre-observe cost, never worse). */
-  private[table] def observedRows(observed: Boolean,
-      obs: org.apache.spark.sql.Observation, cached: DataFrame): Long =
-    observedMetrics(observed, obs).flatMap(_.get("rows")) match {
-      case Some(n: Long) => n
-      case _ => cached.count()
-    }
-
-  /** The probe's observe metrics, or None when the observation never
-    * fired / completed empty (probe-less path, or AQE replanned the
-    * empty probe into a local relation and dropped CollectMetricsExec —
-    * see [[observedRows]]). Blocks until the listener fires when the
-    * probe DID run. */
-  private[table] def observedMetrics(observed: Boolean,
-      obs: org.apache.spark.sql.Observation): Option[Map[String, Any]] =
-    if (!observed) None
-    else Some(obs.get).filter(_.get("rows").exists(_.isInstanceOf[Long]))
-
-  /** Probe-side type plan for the merge key: the Spark column type the
-    * interval frame uses, and how to normalize the source key onto it.
-    * None ⇒ the key type can't be probed (every stat-bearing file is
-    * treated as touched — correct, just unpruned). */
-  private[table] def keyProbe(dt: DataType): Option[(DataType, Column => Column)] =
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Some((LongType, _.cast("long")))
-      case FloatType | DoubleType => Some((DoubleType, _.cast("double")))
-      case StringType => Some((StringType, identity[Column] _))
-      case DateType => Some((LongType, c => unix_date(c).cast("long")))
-      case TimestampType => Some((LongType, c => unix_micros(c)))
-      case _ => None
-    }
-
-  /** Pruning primitive → external row value for the interval frame. */
-  private[table] def primExternal(v: Any, t: DataType): Any = (v, t) match {
-    case (x: Long, LongType) => x
-    case (x: Double, DoubleType) => x
-    case (x: String, StringType) => x
-    case _ => sys.error(s"merge probe: $v is not a $t")
   }
 
   // ----------------------------------------------------------- dml

@@ -1,11 +1,15 @@
 package graft.table
 
+import java.util.UUID
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types._
 
-import ManifestTable.{FileEntry, Snapshot}
+import ManifestTable.{FileEntry, Snapshot, fileBounds, primLt}
 
 /** Standard SQL MERGE INTO over a [[ManifestTable]]: composite join
   * keys, an ordered `WHEN MATCHED [AND <cond>] THEN UPDATE/DELETE`
@@ -28,16 +32,16 @@ import ManifestTable.{FileEntry, Snapshot}
   *     source keys that match nothing insert independently, exactly as
   *     running the INSERT branch per row would.
   *
-  * Scale shape, same discipline as the single-key merge: files are
-  * pruned by a PER-COLUMN interval-intersection probe (a file is
-  * touched iff some source row falls inside its [min,max] bounds on
-  * EVERY probed key column — one broadcast range join against the
-  * metadata-sized file-interval table), the touched side is rewritten
-  * with one broadcast left join (the table side never shuffles), and
-  * untouched files carry over by reference. INSERT-only merges rewrite
-  * nothing at all — they stage just the new rows. Version races rebase
-  * through [[ManifestTable.commitRewrite]] with per-column range
-  * intersection as the conflict test.
+  * Scale shape: [[SourceProbe]] — the one merge core this module
+  * shares with the CDC-shaped [[ManifestTable.merge]] — observes the
+  * source, picks the touched files by a PER-COLUMN interval probe (a
+  * file is touched iff some source row falls inside its [min,max]
+  * bounds on EVERY probed key column), gates the broadcast and decides
+  * rebase conflicts by per-column range intersection. The touched side
+  * is rewritten with one broadcast left join (the table side never
+  * shuffles), and untouched files carry over by reference. INSERT-only
+  * merges rewrite nothing at all — they stage just the new rows.
+  * Version races rebase through [[ManifestTable.commitRewrite]].
   */
 object MergeInto {
 
@@ -77,6 +81,8 @@ object MergeInto {
 
   private val SrcStruct = "__src"
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Merges whose insert set was derived from the rewrite pass's OWN
     * observe — i.e. the touched files were scanned exactly once (spec
     * hook for the single-pass law). */
@@ -99,8 +105,18 @@ object MergeInto {
         * ONLY: a type conflict on an existing column, or a source
         * column whose name is tombstoned (dropped / renamed away),
         * fails loudly before anything stages. */
-      schemaEvolution: Boolean = false): Snapshot = {
-    val head = ManifestTable.current(spark, dir)
+      schemaEvolution: Boolean = false): Snapshot =
+    applyAt(spark, dir, ManifestTable.current(spark, dir), source, keys,
+      matched, notMatched, notMatchedBySource, schemaEvolution)
+
+  /** [[apply]] computed against an explicit `head` snapshot, then
+    * committed under the same rebase/conflict rules (the stale-head
+    * seam the rebase laws drive, like [[ManifestTable.mergeImpl]]). */
+  private[table] def applyAt(spark: SparkSession, dir: String,
+      head: Snapshot, source: DataFrame, keys: Seq[String],
+      matched: Seq[WhenMatched], notMatched: Seq[WhenNotMatched],
+      notMatchedBySource: Seq[WhenNotMatchedBySource],
+      schemaEvolution: Boolean): Snapshot = {
     val tableSchema = head.schema
     val newFields: Seq[StructField] =
       if (!schemaEvolution) Nil
@@ -170,77 +186,11 @@ object MergeInto {
     // one source-side window pass: the per-composite-key match count
     // feeds the cardinality guard (the only shuffle the source takes)
     val dupW = Window.partitionBy(keys.map(col): _*)
-    val obs = org.apache.spark.sql.Observation()
     val cached = source.withColumn("__dup", count(lit(1)).over(dupW))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // size gate, same as ManifestTable.merge: a CDC-sized source
-    // broadcasts (table side never shuffles); a bulk source falls back
-    // to a shuffle join — identical semantics, no driver OOM. The row
-    // count rides the pruning probe through an observe node ABOVE the
-    // cache point (metrics inside a cached subplan never report) — no
-    // separate count() job; only a probe-less merge pays an explicit
-    // pass.
-    // per-key source RANGES ride the same observe as the row count: the
-    // rebase-conflict test then costs zero extra jobs (previously a
-    // separate one-row aggregate pass over the cached source)
-    val probedKeys = keys.flatMap { k =>
-      ManifestTable.keyProbe(schema(k).dataType)
-        .map { case (t, norm) => (k, t, norm) }
-    }
-    val rangeAggs = probedKeys.zipWithIndex.flatMap { case ((k, _, norm), j) =>
-      Seq(min(norm(col(k))).as(s"lo$j"), max(norm(col(k))).as(s"hi$j")) }
-    val resolved = cached.observe(obs,
-      count(lit(1)).as("rows"), rangeAggs: _*)
-    var observed = false
-    // fallback is load-bearing: an EMPTY probe result makes AQE replan
-    // the stage into an empty relation, dropping the CollectMetricsExec
-    // — see ManifestTable.observedRows
-    lazy val srcRows: Long = ManifestTable.observedRows(observed, obs, cached)
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (srcRows <= ManifestTable.MaxBroadcastSourceRows) broadcast(df)
-      else df
     try {
-      // ---- per-column interval-intersection pruning probe ----
-      val probed = probedKeys
-      val fileBoundsFor = (f: FileEntry) =>
-        probed.map { case (k, _, _) => ManifestTable.fileBounds(f, schema, k) }
-      val statFiles = head.files.zipWithIndex.flatMap { case (f, i) =>
-        val bs = fileBoundsFor(f)
-        if (probed.isEmpty || bs.forall(_.isEmpty)) None else Some((i, bs))
-      }
-      val touchedIdx: Set[Int] =
-        if (statFiles.isEmpty) Set.empty
-        else {
-          val fields = StructField("__fi", IntegerType) +:
-            probed.zipWithIndex.flatMap { case ((_, t, _), j) =>
-              Seq(StructField(s"__mn$j", t), StructField(s"__mx$j", t)) }
-          val rows = statFiles.map { case (i, bs) =>
-            Row.fromSeq(i +: bs.zip(probed).flatMap { case (b, (_, t, _)) =>
-              b match {
-                case Some((mn, mx)) => Seq(ManifestTable.primExternal(mn, t),
-                  ManifestTable.primExternal(mx, t))
-                case None => Seq(null, null)
-              }
-            })
-          }
-          import scala.jdk.CollectionConverters._
-          val ivals = spark.createDataFrame(rows.asJava,
-            StructType(fields.toArray))
-          // a file is touched iff the source key sits inside its bounds
-          // on EVERY bounded column (missing bounds ⇒ unconstrained leg)
-          val cond = probed.zipWithIndex.map { case ((k, _, norm), j) =>
-            col(s"__mn$j").isNull ||
-              (norm(col(s"__k$j")) >= col(s"__mn$j") &&
-                norm(col(s"__k$j")) <= col(s"__mx$j"))
-          }.reduce(_ && _)
-          val idx = resolved.select(probed.zipWithIndex.map {
-            case ((k, _, _), j) => col(k).as(s"__k$j") }: _*)
-            .join(broadcast(ivals), cond)
-            .select("__fi").distinct().collect().map(_.getInt(0)).toSet
-          observed = true // the probe's full pass set the observe metric
-          idx
-        }
-      val boundedIdx = statFiles.map(_._1).toSet
+      val probe = new SourceProbe(dir, head, schema, cached, keys)
+      val resolved = probe.resolved
       // BY SOURCE clauses touch every file their conditions may match
       // (an unconditional clause touches all — any row may be unmatched)
       lazy val bySourceOr = notMatchedBySource.flatMap(_.condition)
@@ -250,10 +200,9 @@ object MergeInto {
         else if (notMatchedBySource.exists(_.condition.isEmpty))
           head.files.map(_.path).toSet
         else ManifestTable.pruneFiles(head, bySourceOr.get).map(_.path).toSet
-      val touched = head.files.zipWithIndex.collect {
-        case (f, i) if !boundedIdx(i) || touchedIdx(i) ||
-          bySourcePaths(f.path) => f
-      }
+      val keyTouched = probe.touched.map(_.path).toSet
+      val touched = head.files.filter(f =>
+        keyTouched(f.path) || bySourcePaths(f.path))
 
       val base = ManifestTable.scanWith(spark, dir, head, touched, schema,
         head.renames)
@@ -307,7 +256,7 @@ object MergeInto {
           lit("mergeInto: multiple source rows match target key ("),
           concat_ws(",", keys.map(c => col(c).cast("string")): _*),
           lit(") — deduplicate the source")))).otherwise(lit(true))
-      val joined0 = base.join(maybeBroadcast(srcKeyed), keys, "left")
+      val joined0 = base.join(probe.maybeBroadcast(srcKeyed), keys, "left")
         .withColumn("__m", when(isMatched, clauseIdx).otherwise(lit(-1)))
         .withColumn("__s", when(!isMatched, bsClauseIdx).otherwise(lit(-1)))
         .where(guard)
@@ -326,8 +275,7 @@ object MergeInto {
       val rewriteNeeded = (matched.nonEmpty ||
         notMatchedBySource.nonEmpty) && touched.nonEmpty
       val singlePass = rewriteNeeded && notMatched.nonEmpty &&
-        head.constraints.isEmpty &&
-        srcRows <= ManifestTable.MaxBroadcastSourceRows
+        head.constraints.isEmpty && probe.broadcastable
       val mkObs = org.apache.spark.sql.Observation()
       val joined = if (singlePass)
         joined0.observe(mkObs, collect_set(when(isMatched,
@@ -391,79 +339,225 @@ object MergeInto {
         else inserts
       val removed = if (rewriteNeeded) touched.map(_.path).toSet
         else Set.empty[String]
-      if (outOpt.isEmpty || (!rewriteNeeded && outOpt.get.isEmpty)) head
-      else {
-        val out = outOpt.get
+      outOpt.fold(head) { out =>
+        // staged under a known dir: an INSERT-only merge whose every
+        // source row matched stages zero rows (stage drops zero-row
+        // files), and its dir is dropped — the insert frame runs once
+        val rel = s"${ManifestTable.DataDir}/${UUID.randomUUID()}"
         val staged0 = ManifestTable.stage(spark, dir, out, head.statsCols,
-          head.partitionCols, head.bloomCols)
+          head.partitionCols, head.bloomCols, rel)
         val staged = if (!singlePass) staged0 else {
           // the rewrite write above completed the observation; a missing
           // metric (AQE replanned an empty rewrite subtree and dropped
-          // the CollectMetricsExec — same seam as
-          // ManifestTable.observedRows) falls back to the key-column
-          // anti-join against the touched scan — correct, just paying
-          // the second scan this path exists to avoid
+          // the CollectMetricsExec — the same seam as SourceProbe's
+          // dropped observation) falls back to the key-column anti-join
+          // against the touched scan — correct, just paying the second
+          // scan this path exists to avoid
           val insertsDf = mkObs.get.get("__mk") match {
             case Some(s: scala.collection.Seq[_]) =>
               singlePassMerges.incrementAndGet()
               val keySchema = StructType(keys.map(k =>
                 StructField(k, schema(k).dataType)).toArray)
               val rows = s.toSeq.map(_.asInstanceOf[Row])
-              import scala.jdk.CollectionConverters._
               insertsFrom(broadcast(
                 spark.createDataFrame(rows.asJava, keySchema)))
-            case _ => insertsFrom(base.select(keys.map(col): _*))
+            case _ =>
+              log.warn(s"merge-into $dir@v${head.version}: the single-pass " +
+                "matched-key observation was dropped (AQE replanned an " +
+                "empty rewrite subtree) — deriving inserts from a second " +
+                s"key anti-join over the ${touched.size} touched files")
+              insertsFrom(base.select(keys.map(col): _*))
           }
           staged0 ++ ManifestTable.stage(spark, dir, insertsDf,
             head.statsCols, head.partitionCols, head.bloomCols)
         }
-        // rebase conflict: a concurrently ADDED file conflicts unless
-        // PROVABLY disjoint from the source key range on some column
-        lazy val srcRanges: Seq[Option[(Any, Any)]] =
-          if (probed.isEmpty) Nil
-          else ManifestTable.observedMetrics(observed, obs) match {
-            // the probe pass already aggregated the ranges (zero extra
-            // jobs); null lo = empty source on that column
-            case Some(m) => probed.indices.map { j =>
-              m.get(s"lo$j") match {
-                case Some(null) | None => None
-                case Some(lo) => Some((lo, m(s"hi$j")))
-              }
+        if (!rewriteNeeded && staged.isEmpty) {
+          ManifestTable.dropStaged(spark, dir, rel)
+          head
+        } else {
+          // a concurrently added file also conflicts when a BY SOURCE
+          // clause may touch rows in it (unconditional ⇒ always)
+          val bySourceConflicts: FileEntry => Boolean =
+            if (notMatchedBySource.isEmpty) _ => false
+            else if (notMatchedBySource.exists(_.condition.isEmpty)) _ => true
+            else {
+              val e = org.apache.spark.sql.GraftSqlBridge.expr(bySourceOr.get)
+              f => ManifestTable.mayMatch(f, schema, e)
             }
-            case None =>
-              val aggs = probed.zipWithIndex.flatMap { case ((k, _, norm), j) =>
-                Seq(min(norm(col(k))).as(s"lo$j"), max(norm(col(k))).as(s"hi$j"))
-              }
-              val r = resolved.agg(aggs.head, aggs.tail: _*).head()
-              probed.indices.map { j =>
-                if (r.isNullAt(2 * j)) None
-                else Some((r.get(2 * j), r.get(2 * j + 1)))
-              }
-          }
-        // a concurrently added file also conflicts when a BY SOURCE
-        // clause may touch rows in it (unconditional ⇒ always)
-        val bySourceConflicts: FileEntry => Boolean =
-          if (notMatchedBySource.isEmpty) _ => false
-          else if (notMatchedBySource.exists(_.condition.isEmpty)) _ => true
-          else {
-            val e = org.apache.spark.sql.GraftSqlBridge.expr(bySourceOr.get)
-            f => ManifestTable.mayMatch(f, schema, e)
-          }
-        val conflicts: FileEntry => Boolean = f => bySourceConflicts(f) || {
-          if (probed.isEmpty) true
-          else if (srcRanges.forall(_.isEmpty)) false // empty source
-          else !probed.zipWithIndex.exists { case ((k, _, _), j) =>
-            (ManifestTable.fileBounds(f, schema, k), srcRanges(j)) match {
-              case (Some((mn, mx)), Some((lo, hi))) =>
-                ManifestTable.primLt(mx, lo) || ManifestTable.primLt(hi, mn)
-              case _ => false // unknown on this column: can't prove disjoint
-            }
-          }
+          ManifestTable.commitRewrite(spark, dir, head, "merge-into",
+            removed, staged, f => bySourceConflicts(f) || probe.conflicts(f),
+            None, schemaJson =
+              if (newFields.isEmpty) None else Some(schema.json))
         }
-        ManifestTable.commitRewrite(spark, dir, head, "merge-into",
-          removed, staged, conflicts, None,
-          schemaJson = if (newFields.isEmpty) None else Some(schema.json))
       }
     } finally cached.unpersist()
+  }
+
+  /** Merge sources at or under this row count are BROADCAST to the
+    * rewrite join (the table side then never shuffles — the CDC fast
+    * path); above it the join degrades to a plain shuffle join with
+    * identical semantics instead of OOMing the driver on a bulk
+    * source. ~4M keyed rows is comfortably inside Spark's default 8GB
+    * broadcast-table hard cap for typical row widths. */
+  private val MaxBroadcastSourceRows = 4L * 1000 * 1000
+
+  /** The merge core both merges share — the CDC [[ManifestTable.merge]]
+    * (one key) and [[apply]] (composite keys). Given the head snapshot,
+    * the table schema and the already-resolved, PERSISTED source, it
+    * decides which files the merge touches, whether the source
+    * broadcasts, and which concurrently added files conflict.
+    * Construction runs the one probe job.
+    *
+    * One observe rides the source ABOVE the cache point (metrics inside
+    * a cached subplan never report): the row count (the broadcast gate)
+    * and per-key min/max (the rebase-conflict test) come from the
+    * probe's own pass — no separate count() or range aggregate job
+    * unless the observation was never set or was dropped.
+    *
+    * Touched files: a file is touched iff some source row sits inside
+    * its manifest [min, max] bounds (footer stats, or the exact
+    * partition value) on EVERY bounded key column — one range join of
+    * the source keys against the BROADCAST file-interval table
+    * (metadata-sized: one row per data file), aggregated down to ≤
+    * |files| ints at the driver. Strictly tighter than one [lo, hi]
+    * interval, which a changelog with one far-away key (the
+    * append-plus-update batch shape) would blow up to the whole table.
+    * A file with no bounds on any probed key is always touched; a key
+    * type [[keyProbe]] cannot bound is not probed, so with no probeable
+    * key every file is touched. */
+  private[table] final class SourceProbe(dir: String, head: Snapshot,
+      schema: StructType, cached: DataFrame, keys: Seq[String]) {
+    private val obs = org.apache.spark.sql.Observation()
+    private val probed = keys.flatMap { k =>
+      keyProbe(schema(k).dataType).map { case (t, norm) => (k, t, norm) }
+    }
+    private val rangeAggs = probed.zipWithIndex.flatMap {
+      case ((k, _, norm), j) =>
+        Seq(min(norm(col(k))).as(s"lo$j"), max(norm(col(k))).as(s"hi$j"))
+    }
+    /** The source with the observe attached: every consumer of the
+      * merge source reads this frame. */
+    val resolved: DataFrame =
+      cached.observe(obs, count(lit(1)).as("rows"), rangeAggs: _*)
+    private var observed = false
+
+    val touched: Vector[FileEntry] = {
+      val statFiles = head.files.zipWithIndex.flatMap { case (f, i) =>
+        val bs = probed.map { case (k, _, _) => fileBounds(f, schema, k) }
+        if (probed.isEmpty || bs.forall(_.isEmpty)) None else Some((i, bs))
+      }
+      val touchedIdx: Set[Int] =
+        if (statFiles.isEmpty) Set.empty
+        else {
+          val fields = StructField("__fi", IntegerType) +:
+            probed.zipWithIndex.flatMap { case ((_, t, _), j) =>
+              Seq(StructField(s"__mn$j", t), StructField(s"__mx$j", t)) }
+          val rows = statFiles.map { case (i, bs) =>
+            Row.fromSeq(i +: bs.zip(probed).flatMap {
+              case (Some((mn, mx)), (_, t, _)) =>
+                Seq(primExternal(mn, t), primExternal(mx, t))
+              case (None, _) => Seq(null, null)
+            })
+          }
+          val ivals = cached.sparkSession.createDataFrame(rows.asJava,
+            StructType(fields.toArray))
+          // missing bounds on a column ⇒ that leg is unconstrained
+          val cond = probed.indices.map { j =>
+            col(s"__mn$j").isNull || (col(s"__k$j") >= col(s"__mn$j") &&
+              col(s"__k$j") <= col(s"__mx$j"))
+          }.reduce(_ && _)
+          val idx = resolved.select(probed.zipWithIndex.map {
+            case ((k, _, norm), j) => norm(col(k)).as(s"__k$j") }: _*)
+            .join(broadcast(ivals), cond)
+            .select("__fi").distinct().collect().map(_.getInt(0)).toSet
+          observed = true // the probe's full pass set the observe metric
+          idx
+        }
+      val boundedIdx = statFiles.map(_._1).toSet
+      head.files.zipWithIndex.collect {
+        case (f, i) if !boundedIdx(i) || touchedIdx(i) => f
+      }
+    }
+
+    /** The observe metrics, or None when no probe ran or the
+      * observation was dropped. The drop is load-bearing, not
+      * defensive: when the probe's result is EMPTY, AQE replans the
+      * finished stage into an empty local relation, the
+      * CollectMetricsExec vanishes from the final adaptive plan, and
+      * the ObservationManager completes the observation with Row.empty.
+      * Blocks until the listener fires when the probe ran. */
+    private lazy val metrics: Option[Map[String, Any]] =
+      if (!observed) None
+      else {
+        val m = Some(obs.get).filter(_.get("rows").exists(_.isInstanceOf[Long]))
+        if (m.isEmpty) log.info(s"merge source on $dir@v${head.version}: " +
+          "probe observation dropped (AQE replanned the empty probe) — " +
+          "counting the cached source instead")
+        m
+      }
+
+    /** Source row count: the observe metric the probe already paid for,
+      * else one count() over the ALREADY-CACHED source (the pre-observe
+      * cost, never worse). */
+    lazy val rows: Long = metrics.flatMap(_.get("rows")) match {
+      case Some(n: Long) => n
+      case _ => cached.count()
+    }
+    /** The broadcast gate: see [[MaxBroadcastSourceRows]]. */
+    def broadcastable: Boolean = rows <= MaxBroadcastSourceRows
+    def maybeBroadcast(df: DataFrame): DataFrame =
+      if (broadcastable) broadcast(df) else df
+
+    // per probed key, the source's [lo, hi]; None = no non-null key on
+    // that column. Lazily priced: the happy path (no race) never reads it
+    private lazy val ranges: Seq[Option[(Any, Any)]] =
+      if (probed.isEmpty) Nil
+      else {
+        val r = metrics.map(m => Row.fromSeq(probed.indices.flatMap(j =>
+          Seq(m.getOrElse(s"lo$j", null), m.getOrElse(s"hi$j", null)))))
+          .getOrElse(resolved.agg(rangeAggs.head, rangeAggs.tail: _*).head())
+        probed.indices.map { j =>
+          if (r.isNullAt(2 * j)) None else Some((r.get(2 * j), r.get(2 * j + 1)))
+        }
+      }
+
+    /** Rebase conflict test for a concurrently ADDED file: it conflicts
+      * unless its bounds are PROVABLY disjoint from the source key range
+      * on some probed column — otherwise the other commit may have
+      * landed rows for keys this merge also resolved, and interleaving
+      * them would leave duplicate keys. No probeable key ⇒ every added
+      * file conflicts; an empty source conflicts with nothing. */
+    def conflicts(f: FileEntry): Boolean =
+      if (probed.isEmpty) true
+      else if (ranges.forall(_.isEmpty)) false
+      else !probed.zipWithIndex.exists { case ((k, _, _), j) =>
+        (fileBounds(f, schema, k), ranges(j)) match {
+          case (Some((mn, mx)), Some((lo, hi))) =>
+            primLt(mx, lo) || primLt(hi, mn)
+          case _ => false // unknown on this column: can't prove disjoint
+        }
+      }
+  }
+
+  /** Probe-side type plan for a merge key: the Spark column type the
+    * interval frame uses, and how to normalize the source key onto it.
+    * None ⇒ the key type can't be probed. */
+  private def keyProbe(dt: DataType): Option[(DataType, Column => Column)] =
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        Some((LongType, _.cast("long")))
+      case FloatType | DoubleType => Some((DoubleType, _.cast("double")))
+      case StringType => Some((StringType, identity[Column] _))
+      case DateType => Some((LongType, c => unix_date(c).cast("long")))
+      case TimestampType => Some((LongType, c => unix_micros(c)))
+      case _ => None
+    }
+
+  /** Pruning primitive → external row value for the interval frame. */
+  private def primExternal(v: Any, t: DataType): Any = (v, t) match {
+    case (x: Long, LongType) => x
+    case (x: Double, DoubleType) => x
+    case (x: String, StringType) => x
+    case _ => sys.error(s"merge probe: $v is not a $t")
   }
 }

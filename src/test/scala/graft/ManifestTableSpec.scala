@@ -270,6 +270,39 @@ class ManifestTableSpec extends SparkSuite {
     assert(carried.size == 3,
       s"expected 3 of 4 files untouched, carried=$carried")
     assert(content(dir).count(_._2.startsWith("N")) == 4)
+    // the same law across key types, against the brute-force reference
+    // (decimal is unprobeable: every file is touched)
+    val ts = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try {
+      val ids = spark.range(1, 401).toDF("i")
+      Seq(
+        "string" -> format_string("k%04d", col("i")),
+        "date" -> date_add(lit("2020-01-01").cast("date"), col("i").cast("int")),
+        "timestamp" -> timestamp_seconds(col("i") * 3600),
+        "decimal" -> (col("i") / 100).cast("decimal(10,2)")
+      ).foreach { case (tag, key) =>
+        val d = freshDir(s"prune_$tag")
+        def keyed(df: org.apache.spark.sql.DataFrame,
+            v: org.apache.spark.sql.Column) =
+          df.select(key.as("k"), v.as("v"))
+        ManifestTable.create(spark, d, keyed(ids, col("i").cast("string"))
+          .repartitionByRange(4, col("k")), statsCols = Seq("k"))
+        val h = ManifestTable.snapshot(spark, d)
+        val src = keyed(ids.where(col("i").between(5, 8)), lit("N"))
+        val expect = MergeIntoSpec.referenceTouched(h, Seq("k"),
+          src.select("k").collect().toSeq)
+        assert(if (tag == "decimal") expect.size == h.files.size
+          else expect.size < h.files.size, tag)
+        val after = ManifestTable.merge(spark, d, src, "k")
+        assert(h.files.map(_.path).toSet -- after.files.map(_.path) ==
+          expect, tag)
+        assert(ManifestTable.read(spark, d).where(col("v") === "N")
+          .count() == 4L, tag)
+      }
+    } finally ts.fold(spark.conf.unset(
+      "spark.sql.parquet.outputTimestampType"))(
+      spark.conf.set("spark.sql.parquet.outputTimestampType", _))
   }
 
   test("empty-result snapshots read back with schema intact") {

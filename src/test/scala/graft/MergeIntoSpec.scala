@@ -22,6 +22,10 @@ class MergeIntoSpec extends SparkSuite {
     ManifestTable.read(spark, dir).select("k1", "k2", "v").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
 
+  private def removedPaths(before: ManifestTable.Snapshot,
+      after: ManifestTable.Snapshot): Set[String] =
+    before.files.map(_.path).toSet -- after.files.map(_.path)
+
   private def seed(dir: String): Unit = {
     import spark.implicits._
     // 20 rows over composite key (k1 in 1..10 × k2 in 0..1)
@@ -82,6 +86,45 @@ class MergeIntoSpec extends SparkSuite {
       before.files.size, "only the overlapping files may be rewritten")
     assert(rows(dir)((1L, 0L, "upd")))
     assert(ManifestTable.read(spark, dir).count() == 20L)
+    assert(removedPaths(before, after) == MergeIntoSpec.referenceTouched(
+      before, Seq("k1", "k2"), source.select("k1", "k2").collect().toSeq))
+    // more key shapes, each against the brute-force reference: a
+    // composite key whose second column has no stats, (string, date),
+    // and (timestamp, decimal) — decimal is unprobeable, so only the
+    // timestamp column prunes
+    val ts = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try {
+      val ids = spark.range(1, 201).toDF("i")
+      Seq(
+        ("k2_no_stats", col("i"), col("i") % 2, Seq("a")),
+        ("string_date", format_string("s%04d", col("i")),
+          date_add(lit("2020-01-01").cast("date"), col("i").cast("int")),
+          Seq("a", "b")),
+        ("timestamp_decimal", timestamp_seconds(col("i") * 3600),
+          (col("i") / 100).cast("decimal(10,2)"), Seq("a", "b"))
+      ).foreach { case (tag, a, b, statsCols) =>
+        val d = freshDir(s"prune_$tag")
+        def keyed(df: DataFrame) = df.select(a.as("a"), b.as("b"),
+          col("i").cast("string").as("v"))
+        ManifestTable.create(spark, d,
+          keyed(ids).repartitionByRange(4, col("a")), statsCols = statsCols)
+        val h = ManifestTable.snapshot(spark, d)
+        val src = keyed(ids.where(col("i").isin(5L, 6L, 150L)))
+          .withColumn("v", lit("upd"))
+        val expect = MergeIntoSpec.referenceTouched(h, Seq("a", "b"),
+          src.select("a", "b").collect().toSeq)
+        assert(expect.size < h.files.size, s"$tag: the reference prunes")
+        MergeInto(spark, d, src, Seq("a", "b"),
+          matched = Seq(WhenMatched(UpdateAll)))
+        assert(removedPaths(h, ManifestTable.snapshot(spark, d)) == expect,
+          tag)
+        assert(ManifestTable.read(spark, d).where(col("v") === "upd")
+          .count() == 3L, tag)
+      }
+    } finally ts.fold(spark.conf.unset(
+      "spark.sql.parquet.outputTimestampType"))(
+      spark.conf.set("spark.sql.parquet.outputTimestampType", _))
   }
 
   test("cardinality guard: duplicate source keys that MATCH a target " +
@@ -139,6 +182,53 @@ class MergeIntoSpec extends SparkSuite {
     val s = MergeInto(spark, dir, src2, Seq("k1", "k2"),
       matched = Seq(WhenMatched(Delete)))
     assert(s.version == h.version, "merge touching nothing commits nothing")
+    // all-matched INSERT-only merge: the insert frame is empty, so no
+    // version commits and its stage dir is dropped
+    def stageDirs = new java.io.File(dir, ManifestTable.DataDir).list().toSet
+    val dirsBefore = stageDirs
+    val s3 = MergeInto(spark, dir, Seq((1L, 0L, "dup")).toDF("k1", "k2", "v"),
+      Seq("k1", "k2"), notMatched = Seq(WhenNotMatched(InsertAll)))
+    assert(s3.version == h.version && stageDirs == dirsBefore,
+      "all-matched INSERT-only merge commits nothing and leaves no stage dir")
+  }
+
+  test("MERGE INTO rebases over a concurrent merge on a DISJOINT key " +
+    "range; a concurrent file overlapping the source range on every " +
+    "key column conflicts") {
+    import spark.implicits._
+    val dir = freshDir("rebase")
+    def kv(r: Seq[(Long, Long, String)]) = r.toDF("k1", "k2", "v").coalesce(1)
+    ManifestTable.create(spark, dir, kv((1L to 10L).map(i => (i, 0L, "low"))),
+      statsCols = Seq("k1", "k2"))
+    ManifestTable.append(spark, dir,
+      kv((100L to 110L).map(i => (i, 0L, "high"))))
+    val upd = Seq(WhenMatched(UpdateAll))
+    def stale(head: ManifestTable.Snapshot, k1: Long, v: String) =
+      MergeInto.applyAt(spark, dir, head, kv(Seq((k1, 0L, v))),
+        Seq("k1", "k2"), upd, Nil, Nil, schemaEvolution = false)
+    val h0 = ManifestTable.snapshot(spark, dir)
+    // concurrent merge rewrites the HIGH file
+    MergeInto(spark, dir, kv(Seq((100L, 0L, "HIGH"))), Seq("k1", "k2"),
+      matched = upd)
+    // stale merge on the LOW range: its touched file is still live and
+    // the concurrent merge's staged file is bounds-disjoint ⇒ rebase
+    val snap = stale(h0, 1L, "LOW")
+    assert(snap.parent == h0.version + 1)
+    val got = rows(dir)
+    assert(got((1L, 0L, "LOW")) && got((100L, 0L, "HIGH")) &&
+      got((2L, 0L, "low")))
+    // a concurrent INSERT-only merge adds a file spanning k1 [2, 4] and
+    // k2 [-1, 1]: it overlaps the stale source key (3, 0) on every key
+    // column ⇒ read-write conflict, nothing committed
+    val h1 = ManifestTable.snapshot(spark, dir)
+    MergeInto(spark, dir, kv(Seq((2L, 1L, "ins"), (4L, -1L, "ins"))),
+      Seq("k1", "k2"), notMatched = Seq(WhenNotMatched(InsertAll)))
+    val e = intercept[ManifestTable.ConcurrentCommitException] {
+      stale(h1, 3L, "THREE")
+    }
+    assert(e.getMessage.contains("read-write conflict"))
+    assert(ManifestTable.snapshot(spark, dir).version == h1.version + 1)
+    assert(rows(dir)((3L, 0L, "low")))
   }
 
   test("single-pass rewrite+insert (r18): a broadcast-sized merge with " +
@@ -235,5 +325,37 @@ class MergeIntoSpec extends SparkSuite {
       matched = Seq(WhenMatched(UpdateAll)),
       notMatchedBySource = Seq(WhenNotMatchedBySource(Delete)))
     assert(rows(dir2) == Set((1L, 0L, "one"), (2L, 1L, "two")))
+  }
+}
+
+object MergeIntoSpec {
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.types.DecimalType
+
+  /** Brute-force reference for the merge probe: the paths of the files
+    * in `snap` whose manifest bounds admit some source key on EVERY
+    * bounded key column. Decimal bounds are unscaled footer integers
+    * the probe does not read, so a decimal column bounds nothing. */
+  def referenceTouched(snap: ManifestTable.Snapshot, keys: Seq[String],
+      srcKeys: Seq[Row]): Set[String] = {
+    val schema = snap.schema
+    def prim(v: Any): Any = v match {
+      case x: Int => x.toLong
+      case d: java.sql.Date => d.toLocalDate.toEpochDay
+      case t: java.sql.Timestamp =>
+        val i = t.toInstant
+        i.getEpochSecond * 1000000L + i.getNano / 1000
+      case x => x
+    }
+    def admits(f: ManifestTable.FileEntry, r: Row): Boolean =
+      keys.zipWithIndex.forall { case (k, j) =>
+        ManifestTable.fileBounds(f, schema, k) match {
+          case Some((mn, mx)) if !schema(k).dataType.isInstanceOf[DecimalType] =>
+            !r.isNullAt(j) && !ManifestTable.primLt(prim(r.get(j)), mn) &&
+              !ManifestTable.primLt(mx, prim(r.get(j)))
+          case _ => true
+        }
+      }
+    snap.files.filter(f => srcKeys.exists(admits(f, _))).map(_.path).toSet
   }
 }

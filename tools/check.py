@@ -2,11 +2,16 @@
 """Local replica of the driver's t2 correctness gate.
 
 Usage: python3 tools/check.py [sfDir] [outDir] [query ...]
+       python3 tools/check.py --same <outDirA> <outDirB>
 
 1. Runs graft.Verify via sbt (writes per-query parquet + oracle_sql.json).
 2. Registers the sfDir parquet tables in DuckDB, runs each oracle SQL.
 3. Compares Spark output vs DuckDB output: row count, column names/dtypes
    (sorted by name), and exact values (bitwise for floats).
+
+`--same` compares two Verify output trees (say, a change and its parent)
+without DuckDB: one order-insensitive digest per query dir, and every
+dir whose digest differs, or that exists on one side only, is printed.
 
 Driver-side-only deps (duckdb/pandas/pyarrow) — dev tooling, not shipped.
 """
@@ -377,7 +382,49 @@ def bench_compare(path):
     sys.exit(1 if investigate else 0)
 
 
+def dir_digest(path):
+    """Order-insensitive digest of one Verify output dir: its column names
+    and types plus the SORTED per-row hashes, so neither row order nor the
+    split into part files matters, while duplicate rows and every value
+    bit do (repr of a float round-trips exactly)."""
+    import hashlib
+    try:
+        t = pq.read_table(path)
+    except Exception as e:
+        return f"UNREADABLE {type(e).__name__}"
+    h = hashlib.sha256(str(t.schema.remove_metadata()).encode())
+    for d in sorted(hashlib.sha256(repr(r).encode()).digest()
+                    for r in t.to_pylist()):
+        h.update(d)
+    return h.hexdigest()
+
+
+def same(dir_a, dir_b):
+    """Print the query dirs whose output differs between two Verify runs;
+    exit 1 if any does."""
+    def dirs(root):
+        return {d for d in os.listdir(root)
+                if os.path.isdir(os.path.join(root, d))}
+    a, b = dirs(dir_a), dirs(dir_b)
+    diff = []
+    for d in sorted(a | b):
+        if d not in a or d not in b:
+            diff.append(d)
+            print(f"ONLY {dir_a if d in a else dir_b}: {d}")
+        elif dir_digest(os.path.join(dir_a, d)) != dir_digest(
+                os.path.join(dir_b, d)):
+            diff.append(d)
+            print(f"DIFF {d}")
+    n = len(a | b)
+    print(f"\n{n - len(diff)} of {n} identical, {len(diff)} differ")
+    sys.exit(1 if diff else 0)
+
+
 def main():
+    if len(sys.argv) > 1 and sys.argv[1] == "--same":
+        if len(sys.argv) != 4:
+            sys.exit("usage: check.py --same <outDirA> <outDirB>")
+        same(sys.argv[2], sys.argv[3])
     if len(sys.argv) > 1 and sys.argv[1] == "--bench":
         bench_guard(tuple(sys.argv[2:]))
     if len(sys.argv) > 1 and sys.argv[1] == "--compare":
