@@ -237,11 +237,15 @@ object ManifestTable {
       ts: Long = -1L,
       /** Deletion vectors (merge-on-read DELETE): file path → the DV
         * parquet dirs whose (base, idx) rows are subtracted from that
-        * file at read time. Empty for most tables — every read path
-        * short-circuits to a plain scan then. A file's effective
-        * content is (path, dvs(path)); rewrites materialize and drop
-        * the entry. [[Snapshot.totalRows]] counts PHYSICAL rows (before
-        * DV subtraction). */
+        * file at read time. Every DV commit writes ONE dir holding each
+        * hit file's whole vector, so a file's entry is one dir with
+        * exactly its net deleted rows; a list of several dirs (written
+        * before that rule) reads as their union, and the file's next
+        * DV commit collapses it to one. Empty for most tables — every
+        * read path short-circuits to a plain scan then. A file's
+        * effective content is (path, dvs(path)); rewrites materialize
+        * and drop the entry. [[Snapshot.totalRows]] counts PHYSICAL
+        * rows (before DV subtraction). */
       dvs: Map[String, Vector[String]] = Map.empty,
       /** PER-WRITER streaming replay marks (txn id → highest committed
         * batch id) — the Delta txnAppId pattern. The table-global
@@ -3117,17 +3121,22 @@ object ManifestTable {
       // only the NEW rows need checking — touched base rows conformed
       // at their own commit and pass through byte-identical
       enforce(winners, head.constraints, operation)
-      val srcKeys = resolved.select(col(key))
-      val base = scanWith(spark, dir, head, touched, schema, head.renames)
-      val rewritten = base
-        .join(probe.maybeBroadcast(srcKeys), Seq(key), "left_anti")
-        .unionByName(winners)
-        .coalesce(math.max(touched.size, 1))
+      // nothing touched: nothing to join against, and the broadcast
+      // gate (a source count the empty probe did not observe) never runs
+      val rewritten =
+        if (touched.isEmpty) winners.coalesce(1)
+        else scanWith(spark, dir, head, touched, schema, head.renames)
+          .join(probe.maybeBroadcast(resolved.select(col(key))), Seq(key),
+            "left_anti")
+          .unionByName(winners)
+          .coalesce(touched.size)
 
-      val staged =
-        if (touched.isEmpty && probe.rows == 0) Vector.empty
-        else stage(spark, dir, rewritten, head.statsCols,
-          head.partitionCols, head.bloomCols)
+      // staged under a known dir: an empty result stages no file, and
+      // its dir is dropped
+      val rel = s"$DataDir/${UUID.randomUUID()}"
+      val staged = stage(spark, dir, rewritten, head.statsCols,
+        head.partitionCols, head.bloomCols, rel)
+      if (staged.isEmpty) dropStaged(spark, dir, rel)
       commitRewrite(spark, dir, head, operation,
         touched.map(_.path).toSet, staged, probe.conflicts, batchId, txnId)
     } finally {
@@ -3177,17 +3186,10 @@ object ManifestTable {
     * when the table has no vectors. Commutes with any concurrent
     * commit that kept the purged files (pure materialization), so it
     * rebases like compact. */
-  def purgeVectors(spark: SparkSession, dir: String): Snapshot =
-    purgeVectors(spark, dir, (_: FileEntry) => true)
-
-  /** Scoped purge: materialize the vectors of just the DV-carrying
-    * files selected by `only` — the auto-purge policy's lever (one
-    * breaching file's rewrite, never every vectored file). */
-  def purgeVectors(spark: SparkSession, dir: String,
-      only: FileEntry => Boolean): Snapshot = {
+  def purgeVectors(spark: SparkSession, dir: String): Snapshot = {
     val head = current(spark, dir)
-    val touched = head.files.filter(f =>
-      head.dvs.get(f.path).exists(_.nonEmpty) && only(f))
+    val touched =
+      head.files.filter(f => head.dvs.get(f.path).exists(_.nonEmpty))
     if (touched.isEmpty) return head
     val rewritten = scanWith(spark, dir, head, touched, head.schema,
         head.renames)
@@ -3210,7 +3212,9 @@ object ManifestTable {
     * [[ConcurrentCommitException]] (the rewrite was computed against a
     * stale snapshot — re-run), never a silent lost update. This is the
     * bulk-pipeline form where the updated slice is tiny and files are
-    * huge; copy-on-write [[update]] remains right for bulk predicates. */
+    * huge; copy-on-write [[update]] remains right for bulk predicates.
+    * Writes [[deleteVector]]'s vector (each hit file's NET deleted
+    * rows) plus the matched rows' new copies. */
   def updateVector(spark: SparkSession, dir: String, filter: Column,
       set: Map[String, Column]): Snapshot = {
     val head = current(spark, dir)
@@ -3231,25 +3235,21 @@ object ManifestTable {
     // staging failure) must leave the table untouched, exactly like the
     // copy-on-write update()
     enforce(updated, head.constraints, "updateVector")
-    stageVector(spark, dir, head, touched, filter) match {
-      case None => head // nothing matched: no commit
-      case Some((rel, hitFiles)) =>
-        val staged = stage(spark, dir, updated, head.statsCols,
-          head.partitionCols, head.bloomCols)
-        val dvs = head.dvs ++ hitFiles.map(f =>
-          f.path -> (head.dvs.getOrElse(f.path, Vector.empty) :+ rel)).toMap
-        // ONE commit carries both the hiding vector and the new copies,
-        // pinned to the snapshot the rewrite was computed against: a
-        // concurrent commit landing in between fails THIS publish with
-        // ConcurrentCommitException and nothing is visible (the staged
-        // data and vector are vacuum-able orphans) — no reader ever
-        // sees the delete without the update, and no stale-snapshot
-        // overwrite can lose a concurrent writer's rows
-        publish(spark, dir, Snapshot(head.version + 1, head.version,
-          "update-dv", head.statsCols, head.partitionCols, head.lastBatch,
-          head.schemaJson, head.files ++ staged, head.constraints,
-          head.dropped, dvs = dvs, txns = head.txns,
-          renames = head.renames, bloomCols = head.bloomCols), Some(head))
+    stageVector(spark, dir, head, touched, filter).fold(head) { dvs =>
+      val staged = stage(spark, dir, updated, head.statsCols,
+        head.partitionCols, head.bloomCols)
+      // ONE commit carries both the hiding vector and the new copies,
+      // pinned to the snapshot the rewrite was computed against: a
+      // concurrent commit landing in between fails THIS publish with
+      // ConcurrentCommitException and nothing is visible (the staged
+      // data and vector are vacuum-able orphans) — no reader ever
+      // sees the delete without the update, and no stale-snapshot
+      // overwrite can lose a concurrent writer's rows
+      publish(spark, dir, Snapshot(head.version + 1, head.version,
+        "update-dv", head.statsCols, head.partitionCols, head.lastBatch,
+        head.schemaJson, head.files ++ staged, head.constraints,
+        head.dropped, dvs = dvs, txns = head.txns,
+        renames = head.renames, bloomCols = head.bloomCols), Some(head))
     }
   }
 
@@ -3268,63 +3268,38 @@ object ManifestTable {
     * exact. Structural no-op when nothing matches. Version races are
     * not auto-rebased — re-run; the op is deleted-rows-priced.
     *
-    * Stacking: each commit records only NET-new (base, idx) pairs
-    * (already-hidden rows are subtracted), so vector DATA grows with
-    * net deleted rows — but every commit adds one vector DIR, and the
-    * read side lists + opens each dir it touches. Measured curve
-    * (r14_dv_stacking.md, 262k rows, one file accumulating all
-    * vectors): reads hold the plain-scan floor through ~50 stacked
-    * dirs (~0.6 s) and drift to ~2-3× floor at 250 (dir-open latency,
-    * not data). Recommendation pinned from that curve: run
-    * [[purgeVectors]] once a file accumulates ~64 vector dirs — purge
-    * cost is one touched-file rewrite (~1-2 s there) and reads return
-    * to the floor; `autoPurgeAt = 64` ENFORCES exactly that policy
-    * inline — the breaching file alone is materialized the moment it
-    * crosses the knee. Scans pruned to vector-free files never pay for
-    * other files' vectors (the subtraction is planned per scanned
-    * file set — see ManifestTableSpec's vector-priced law). */
-  def deleteVector(spark: SparkSession, dir: String, filter: Column,
-      /** Opt-in AUTO-PURGE policy: when > 0, any file whose stacked
-        * vector-dir count reaches this threshold after the delete is
-        * immediately materialized by a SCOPED [[purgeVectors]] (one
-        * breaching-file rewrite — cost ∝ that file, reads return to
-        * the plain-scan floor). The default 64 knee is the measured
-        * dir-open-latency curve in r14_dv_stacking.md; pass 0 to
-        * manage purges manually. */
-      autoPurgeAt: Int = 0): Snapshot = {
+    * One vector per file: the commit writes ONE vector dir, and each
+    * file with a net-new hit gets that dir as its whole entry, holding
+    * the file's prior pairs plus the fresh ones (already-hidden rows
+    * are never re-recorded). So a delete writes the hit files' NET
+    * deleted rows, not only the fresh ones, and a read lists and opens
+    * one dir per vectored file it scans, whatever the number of
+    * deletes. Scans pruned to vector-free files never pay for other
+    * files' vectors (the subtraction is planned per scanned file set —
+    * see ManifestTableSpec's vector-priced law). */
+  def deleteVector(spark: SparkSession, dir: String, filter: Column): Snapshot = {
     val head = current(spark, dir)
     val touched = pruneFilesBloom(spark, dir, head, filter)
     if (touched.isEmpty) return head
-    stageVector(spark, dir, head, touched, filter) match {
-      case None => head // structural no-op: nothing matched
-      case Some((rel, hitFiles)) =>
-        val dvs = head.dvs ++ hitFiles.map(f =>
-          f.path -> (head.dvs.getOrElse(f.path, Vector.empty) :+ rel)).toMap
-        val committed = publish(spark, dir, Snapshot(head.version + 1,
-          head.version, "delete-dv", head.statsCols, head.partitionCols,
-          head.lastBatch, head.schemaJson, head.files, head.constraints,
-          head.dropped, dvs = dvs, txns = head.txns,
-          renames = head.renames, bloomCols = head.bloomCols), Some(head))
-        val breaching =
-          if (autoPurgeAt <= 0) Set.empty[String]
-          else committed.dvs.collect {
-            case (p, vs) if vs.size >= autoPurgeAt => p }.toSet
-        if (breaching.isEmpty) committed
-        else purgeVectors(spark, dir, f => breaching(f.path))
+    // structural no-op when nothing net-new matched
+    stageVector(spark, dir, head, touched, filter).fold(head) { dvs =>
+      publish(spark, dir, Snapshot(head.version + 1,
+        head.version, "delete-dv", head.statsCols, head.partitionCols,
+        head.lastBatch, head.schemaJson, head.files, head.constraints,
+        head.dropped, dvs = dvs, txns = head.txns,
+        renames = head.renames, bloomCols = head.bloomCols), Some(head))
     }
   }
 
-  /** Write the (base, idx) deletion-vector parquet for the rows of
-    * `touched` matching `filter` under the frozen `head`, SUBTRACTING
-    * rows already hidden by the files' existing vectors — stacked
-    * deletes over overlapping predicates never re-record a pair, so
-    * the read-side broadcast grows with NET deleted rows, not with the
-    * number of delete commits. Returns the vector's relative dir and
-    * the files that actually hold hits; None (dir cleaned up) when
-    * nothing matched. Nothing is committed here. */
+  /** Write this commit's ONE vector dir for the rows of `touched`
+    * matching `filter` under the frozen `head`, and return the next
+    * `dvs` map: each file with a net-new hit (a matching row its vector
+    * does not hide yet) gets the dir, holding its prior pairs plus its
+    * fresh ones, as its whole entry; other files keep theirs. None (dir
+    * cleaned up) when no file is hit. Nothing is committed here. */
   private def stageVector(spark: SparkSession, dir: String, head: Snapshot,
       touched: Vector[FileEntry], filter: Column)
-      : Option[(String, Vector[FileEntry])] = {
+      : Option[Map[String, Vector[String]]] = {
     val rel = s"$DvDir/${UUID.randomUUID()}"
     val abs = new Path(dir, rel)
     val (physSchema, _) = renamePlan(head.schema, head.renames)
@@ -3342,15 +3317,17 @@ object ManifestTable {
     val matches = logical
       .where(coalesce(filter, lit(false)))
       .select(col("__dv_b").as("base"), col("__dv_i").as("idx"))
-    val prior = touched.flatMap(f => head.dvs.getOrElse(f.path, Vector.empty))
-      .distinct
-    val fresh =
-      if (prior.isEmpty) matches
-      else matches.join(
-        broadcast(spark.read
-          .parquet(prior.map(p => new Path(dir, p).toString): _*)
-          .select(col("base"), col("idx"))),
-        Seq("base", "idx"), "left_anti")
+    // the pairs `files`' current vectors hide (a dir written by a
+    // multi-file commit also holds other files' pairs)
+    def prior(files: Seq[FileEntry]): Option[DataFrame] = {
+      val dirs = files.flatMap(f => head.dvs.getOrElse(f.path, Vector.empty))
+        .distinct
+      if (dirs.isEmpty) None
+      else Some(spark.read.parquet(dirs.map(p => new Path(dir, p).toString): _*)
+        .select(col("base"), col("idx")))
+    }
+    val fresh = prior(touched).fold(matches)(p =>
+      matches.join(broadcast(p), Seq("base", "idx"), "left_anti"))
     fresh.write.parquet(abs.toString)
     // which touched files actually hold hits: metadata-sized collect
     val hitBases = spark.read.parquet(abs.toString)
@@ -3358,9 +3335,13 @@ object ManifestTable {
     if (hitBases.isEmpty) {
       abs.getFileSystem(conf(spark)).delete(abs, true)
       None
-    } else Some((rel, touched.filter { f =>
-      hitBases(f.path.substring(f.path.lastIndexOf('/') + 1))
-    }))
+    } else {
+      val hit = touched.filter(f =>
+        hitBases(f.path.substring(f.path.lastIndexOf('/') + 1)))
+      prior(hit).foreach(_.where(col("base").isin(hitBases.toSeq: _*))
+        .write.mode("append").parquet(abs.toString))
+      Some(head.dvs ++ hit.map(_.path -> Vector(rel)))
+    }
   }
 
   /** UPDATE … SET `set` WHERE `filter`: same touched-files-only

@@ -256,7 +256,10 @@ object MergeInto {
           lit("mergeInto: multiple source rows match target key ("),
           concat_ws(",", keys.map(c => col(c).cast("string")): _*),
           lit(") — deduplicate the source")))).otherwise(lit(true))
-      val joined0 = base.join(probe.maybeBroadcast(srcKeyed), keys, "left")
+      // lazy: with nothing touched no rewrite runs, and the broadcast
+      // gate (a source count the empty probe did not observe) never does
+      lazy val joined0 = base
+        .join(probe.maybeBroadcast(srcKeyed), keys, "left")
         .withColumn("__m", when(isMatched, clauseIdx).otherwise(lit(-1)))
         .withColumn("__s", when(!isMatched, bsClauseIdx).otherwise(lit(-1)))
         .where(guard)
@@ -277,13 +280,13 @@ object MergeInto {
       val singlePass = rewriteNeeded && notMatched.nonEmpty &&
         head.constraints.isEmpty && probe.broadcastable
       val mkObs = org.apache.spark.sql.Observation()
-      val joined = if (singlePass)
+      lazy val joined = if (singlePass)
         joined0.observe(mkObs, collect_set(when(isMatched,
           struct(keys.map(col): _*))).as("__mk"))
       else joined0
       val allDeletes = deleteIdx.map(i => col("__m") === i) ++
         bsDeleteIdx.map(i => col("__s") === i)
-      val rewritten0 = allDeletes.reduceOption(_ || _)
+      lazy val rewritten0 = allDeletes.reduceOption(_ || _)
         .fold(joined)(d => joined.where(!d))
         .select(cols.map(c => valueOf(c).as(c)): _*)
 
@@ -321,8 +324,10 @@ object MergeInto {
       if (head.constraints.nonEmpty) {
         val changedPred = (updateIdx.map(i => col("__m") === i) ++
           bsUpdateIdx.map(i => col("__s") === i)).reduceOption(_ || _)
-        val updatedSlice = changedPred.map(p => joined.where(p)
-          .select(cols.map(c => valueOf(c).as(c)): _*))
+        // nothing touched ⇒ no row is updated
+        val updatedSlice = changedPred.filter(_ => touched.nonEmpty)
+          .map(p => joined.where(p)
+            .select(cols.map(c => valueOf(c).as(c)): _*))
         (updatedSlice ++ inserts).reduceOption(_ unionByName _).foreach(
           ManifestTable.enforce(_, head.constraints, "mergeInto"))
       }
@@ -498,7 +503,9 @@ object MergeInto {
 
     /** Source row count: the observe metric the probe already paid for,
       * else one count() over the ALREADY-CACHED source (the pre-observe
-      * cost, never worse). */
+      * cost, never worse). Read only by the broadcast gate of a merge
+      * that touched some file: an empty probe (the dropped-observation
+      * case) touches none unless a file has no bounds on the keys. */
     lazy val rows: Long = metrics.flatMap(_.get("rows")) match {
       case Some(n: Long) => n
       case _ => cached.count()

@@ -271,44 +271,37 @@ class DeltaLogSpec extends SparkSuite {
     assert(chg.count() == 0L, "a pure rename moves no rows")
   }
 
-  test("deleteVector auto-purge: the delete that breaches the threshold " +
-    "materializes ONLY the breaching file; other vectored files keep " +
-    "their stacks; content is exact throughout") {
+  test("one vector per file: stacked needles on file A leave A one " +
+    "vector, file B's vector is untouched, content is exact throughout") {
     import spark.implicits._
-    val dir = freshDir("autopurge")
+    val dir = freshDir("onevector")
     // two range files: needles land in file A (keys 1..50); file B
-    // (keys 51..100) gets ONE vector that must survive A's purge
+    // (keys 51..100) gets ONE vector that A's deletes must not touch
     ManifestTable.create(spark, dir,
       (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v")
         .repartitionByRange(2, col("k")), statsCols = Seq("k"))
-    ManifestTable.deleteVector(spark, dir, col("k") === 99L)
-    val threshold = 4
-    (1L to 3L).foreach { i =>
-      ManifestTable.deleteVector(spark, dir, col("k") === i,
-        autoPurgeAt = threshold)
-    }
-    val before = ManifestTable.snapshot(spark, dir)
-    val fileA = before.dvs.collect {
-      case (p, vs) if vs.size == 3 => p }.head
-    // the 4th needle on file A breaches: the policy purges file A only
-    val after = ManifestTable.deleteVector(spark, dir, col("k") === 4L,
-      autoPurgeAt = threshold)
-    assert(after.operation == "purge",
-      "the breaching delete must be followed by the scoped purge commit")
-    assert(!after.dvs.contains(fileA) &&
-      !after.files.exists(_.path == fileA),
-      "the breaching file is materialized (rewritten, vectors dropped)")
-    assert(after.dvs.values.map(_.size).toSeq == Seq(1),
-      s"file B keeps its single vector, got ${after.dvs}")
+    val sB = ManifestTable.deleteVector(spark, dir, col("k") === 99L)
+    val (fileB, vectorB) = sB.dvs.head
+    (1L to 4L).foreach(i =>
+      ManifestTable.deleteVector(spark, dir, col("k") === i))
+    val after = ManifestTable.snapshot(spark, dir)
+    val fileA = (after.dvs.keySet - fileB).head
+    def pairs(rel: String): Long =
+      spark.read.parquet(new Path(dir, rel).toString).count()
+    assert(after.dvs.size == 2 && after.dvs.values.forall(_.size == 1),
+      s"each vectored file has exactly one vector, got ${after.dvs}")
+    assert(after.dvs(fileB) == vectorB, "file B keeps its vector")
+    assert(pairs(after.dvs(fileA).head) == 4L)
     // content is exact: 100 - the 5 deleted keys
-    val got = ManifestTable.read(spark, dir).select("k").collect()
+    def keys = ManifestTable.read(spark, dir).select("k").collect()
       .map(_.getLong(0)).toSet
-    assert(got == ((1L to 100L).toSet -- Seq(1L, 2L, 3L, 4L, 99L)))
-    // below-threshold deletes never purge
-    val s2 = ManifestTable.deleteVector(spark, dir, col("k") === 60L,
-      autoPurgeAt = threshold)
-    assert(s2.operation == "delete-dv" &&
-      s2.dvs.values.map(_.size).sum == 2)
+    assert(keys == ((1L to 100L).toSet -- Seq(1L, 2L, 3L, 4L, 99L)))
+    // a delete on file B replaces B's vector and leaves A's
+    val s2 = ManifestTable.deleteVector(spark, dir, col("k") === 60L)
+    assert(s2.operation == "delete-dv" && s2.dvs(fileA) == after.dvs(fileA))
+    assert(s2.dvs(fileB).size == 1 && s2.dvs(fileB) != vectorB &&
+      pairs(s2.dvs(fileB).head) == 2L)
+    assert(keys == ((1L to 100L).toSet -- Seq(1L, 2L, 3L, 4L, 60L, 99L)))
   }
 
   test("mergeBatch replay marks are per writer too") {

@@ -1197,18 +1197,28 @@ class ManifestTableSpec extends SparkSuite {
     }
     assert(ManifestTable.snapshot(spark, dir).version == s1.version)
     assert(content(dir)(9L -> "v9"), "matched rows must survive a failed SET")
-    // net-new law: delete k<=10 (hides 7's old copy? no — 7's old copy
-    // is already hidden), then k<=20; the second vector must not
-    // re-record the first's pairs
+    // net-new law: delete k<=10 (7's old copy is already hidden), then
+    // k<=20; the original file's vector is REPLACED each time, and the
+    // second delete's vector holds the file's 20 net deleted rows
+    // (1..20, 7's old copy included), each pair once
+    val original = ManifestTable.snapshot(spark, dir, Some(v0)).files.head.path
     ManifestTable.deleteVector(spark, dir, col("k") <= 10L)
     val h2 = ManifestTable.snapshot(spark, dir)
     val s3 = ManifestTable.deleteVector(spark, dir, col("k") <= 20L)
     val newDirs = s3.dvs.values.flatten.toSet -- h2.dvs.values.flatten.toSet
     assert(newDirs.size == 1)
-    val pairRows = spark.read.parquet(
-      new Path(dir, newDirs.head).toString).count()
-    assert(pairRows == 10L,
-      s"second vector must hold ONLY rows 11..20, got $pairRows pairs")
+    assert(s3.dvs(original) == newDirs.toVector,
+      "the hit file's entry is the new vector alone")
+    val firstDir = h2.dvs(original).head
+    assert(s3.dvs.collect { case (p, vs) if vs.contains(firstDir) => p }
+      .toSet == h2.dvs.keySet - original,
+      "the first delete's vector now covers only the updated copy of 7")
+    assert(!s3.dvs.values.flatten.toSet.exists(s1.dvs.values.flatten.toSet),
+      "the update's vector is no longer referenced")
+    val pairs = spark.read.parquet(new Path(dir, newDirs.head).toString)
+    val pairRows = pairs.count()
+    assert(pairRows == 20L && pairs.distinct().count() == 20L,
+      s"second vector must hold the file's 20 net deleted rows, got $pairRows pairs")
     assert(content(dir) == (21L to 50L).map(i => i -> s"v$i").toSet)
   }
 
@@ -1480,7 +1490,11 @@ class ManifestTableSpec extends SparkSuite {
       statsCols = Seq("k"))
     (1 to 5).foreach(i =>
       ManifestTable.deleteVector(spark, dir, col("k") === i.toLong))
-    assert(ManifestTable.snapshot(spark, dir).dvs.values.map(_.size).sum == 5)
+    val vectored = ManifestTable.snapshot(spark, dir).dvs
+    assert(vectored.size == 1 && vectored.values.head.size == 1,
+      s"five needles on one file leave one vector, got $vectored")
+    assert(spark.read.parquet(
+      new Path(dir, vectored.values.head.head).toString).count() == 5L)
     // far-key read prunes to files without vectors: the plan must be a
     // plain parquet scan, no anti-join against the vector frame
     val far = ManifestTable.read(spark, dir, col("k") >= 90L)
@@ -1491,6 +1505,65 @@ class ManifestTableSpec extends SparkSuite {
     val near = ManifestTable.read(spark, dir, col("k") <= 30L)
     assert(near.queryExecution.optimizedPlan.toString.contains("__dv_base"))
     assert(near.count() == 25L)
+  }
+
+  test("one vector per file: a hand-built two-dir list reads as the " +
+    "union, and the file's next DV delete collapses it to one dir " +
+    "holding union ∪ fresh") {
+    import spark.implicits._
+    val dir = freshDir("dv_legacy")
+    val v0 = ManifestTable.create(spark, dir,
+      kv((1L to 40L).map(i => i -> s"v$i")).repartitionByRange(2, col("k")),
+      statsCols = Seq("k"))
+    val file0 = v0.files.find(_.longBounds("k").exists(_._1 == 1L)).get
+    val base = new Path(file0.path).getName
+    val pos = spark.read.parquet(new Path(dir, file0.path).toString)
+      .select(col("k"), col("_metadata.row_index")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the multi-dir shape: each dir holds disjoint pairs of one file
+    def vector(keys: Long*): String = {
+      val rel = s"dv/${java.util.UUID.randomUUID()}"
+      keys.map(k => (base, pos(k))).toDF("base", "idx")
+        .write.parquet(new Path(dir, rel).toString)
+      rel
+    }
+    val legacy = ManifestTable.publish(spark, dir, v0.copy(
+      version = v0.version + 1, parent = v0.version, operation = "delete-dv",
+      ts = -1L, dvs = Map(file0.path -> Vector(vector(1L, 2L), vector(3L)))),
+      Some(v0))
+    assert(legacy.dvs(file0.path).size == 2)
+    assert(content(dir) == (4L to 40L).map(i => i -> s"v$i").toSet,
+      "a multi-dir list reads as the union of its dirs")
+    val next = ManifestTable.deleteVector(spark, dir,
+      col("k") === 3L || col("k") === 5L)
+    val Vector(one) = next.dvs(file0.path)
+    assert(!legacy.dvs(file0.path).contains(one))
+    val pairs = spark.read.parquet(new Path(dir, one).toString)
+      .select("base", "idx").collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(pairs.toSeq.sorted == Seq(1L, 2L, 3L, 5L).map(k => (base, pos(k))).sorted,
+      "the one dir holds union ∪ fresh, each pair once")
+    assert(content(dir) == ((4L to 40L).toSet - 5L).map(i => i -> s"v$i"))
+  }
+
+  test("vacuum after stacked needle deletes leaves one vector dir for the " +
+    "file, and content is unchanged") {
+    val dir = freshDir("dv_vacuum")
+    ManifestTable.create(spark, dir,
+      kv((1L to 100L).map(i => i -> s"v$i")).repartitionByRange(4, col("k")),
+      statsCols = Seq("k"))
+    (1L to 10L).foreach(i =>
+      ManifestTable.deleteVector(spark, dir, col("k") === i))
+    val before = content(dir)
+    assert(before == (11L to 100L).map(i => i -> s"v$i").toSet)
+    ManifestTable.vacuum(spark, dir, keepLast = 1)
+    val head = ManifestTable.snapshot(spark, dir)
+    val dvRoot = new Path(dir, "dv")
+    val left = dvRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dvRoot).filter(_.isDirectory).map(_.getPath.getName).toSeq
+    assert(head.dvs.size == 1 &&
+      left == head.dvs.values.flatten.map(p => new Path(p).getName).toSeq,
+      s"vacuum must leave exactly the file's one vector dir, left $left")
+    assert(content(dir) == before)
   }
 
   /** Files the graft scans of `df`'s executed plan listed: the

@@ -1349,14 +1349,28 @@ class MarqueeStressSpec extends AnyFunSuite {
       bloomCols = Seq("k"))
     ManifestTable.create(spark, dirP, base, statsCols = Seq("k"))
     val needles = (1 to 20).map(i => i * 40000L + 17L)
-    def drive(dir: String): (Double, Int) = {
+    // the work twin of the wall-time race below: input records every
+    // task of the 20 timed deletes read (scans and vector reads alike)
+    def drive(dir: String): (Double, Int, Long) = {
       var vectored = 0
+      val records = new java.util.concurrent.atomic.AtomicLong
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m =>
+            records.addAndGet(m.inputMetrics.recordsRead))
+      }
+      spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      needles.foreach { n =>
+      try needles.foreach { n =>
         val s = ManifestTable.deleteVector(spark, dir, col("k") === n)
         vectored = s.dvs.size
+      } finally {
+        org.apache.spark.GraftListenerDrain.waitUntilEmpty(
+          spark.sparkContext, 30000)
+        spark.sparkContext.removeSparkListener(listener)
       }
-      (((System.nanoTime() - t0) / 1e9), vectored)
+      (((System.nanoTime() - t0) / 1e9), vectored, records.get)
     }
     // untimed warmup on BOTH twins: the first deleteVector of the JVM
     // pays codegen/JIT for the whole path — without this, whichever
@@ -1365,8 +1379,8 @@ class MarqueeStressSpec extends AnyFunSuite {
       ManifestTable.deleteVector(spark, d, col("k") === 1L)
       ManifestTable.deleteVector(spark, d, col("k") === 2L)
     }
-    val (tB, nB) = drive(dirB)
-    val (tP, nP) = drive(dirP)
+    val (tB, nB, rB) = drive(dirB)
+    val (tP, nP, rP) = drive(dirP)
     // identical results, bloom-priced vs table-priced work
     assert(ManifestTable.read(spark, dirB).count() == 1000000L - 22L)
     assert(ManifestTable.read(spark, dirP).count() == 1000000L - 22L)
@@ -1376,17 +1390,22 @@ class MarqueeStressSpec extends AnyFunSuite {
       "bloom must keep ~1 of ~40 unsorted files")
     assert(ManifestTable.pruneFiles(headB, probe).size == headB.files.size,
       "intervals alone must admit every file on the striped layout")
+    // ≤ 3 of 40 files kept per needle bounds the bloomed reads at 3/40
+    assert(rB * 10 <= rP,
+      s"bloomed needle deletes read $rB records, the full-scan twin $rP")
     assert(tB < tP,
       f"bloomed needle deletes ($tB%.1f s) must undercut the " +
         f"full-scan twin ($tP%.1f s)")
     info(f"20 needle DV deletes on 1M rows / 40 unsorted files: " +
-      f"bloomed $tB%.1f s ($nB files vectored) vs no-bloom $tP%.1f s " +
-      f"($nP files vectored) — per-needle scan is ~1 file vs 40")
+      f"bloomed $tB%.1f s, $rB records read ($nB files vectored) vs " +
+      f"no-bloom $tP%.1f s, $rP records read ($nP files vectored) — " +
+      f"per-needle scan is ~1 file vs 40")
   }
 
   test("DV stacking cost curve: read stays vector-priced as commits " +
     "accumulate on one file; purge resets to the plain-scan floor", Marquee) {
     import graft.table.ManifestTable
+    import org.apache.hadoop.fs.Path
     val dir = java.nio.file.Files.createTempDirectory("mq_dvstack").toString
     val base = spark.range(262144L)
       .select(col("id").as("k"), (col("id") % 1009).as("v"))
@@ -1398,8 +1417,8 @@ class MarqueeStressSpec extends AnyFunSuite {
       t
     }
     // stack needle deletes, all inside file 0's key range so ONE file
-    // accumulates every vector (the worst case for the read-side
-    // broadcast assembly: V separate DV dirs to list + read)
+    // takes every delete: it must still carry ONE vector dir holding
+    // exactly its net deleted rows, and a read opens that dir alone
     var stacked = 0
     val checkpoints = Seq(10, 50, 250)
     val walls = scala.collection.mutable.LinkedHashMap.empty[Int, Double]
@@ -1409,9 +1428,21 @@ class MarqueeStressSpec extends AnyFunSuite {
         stacked += 1
       }
       val head = ManifestTable.snapshot(spark, dir)
-      assert(head.dvs.values.map(_.size).sum == stacked,
-        s"each commit must stack exactly one vector dir")
-      val n = ManifestTable.read(spark, dir).count()
+      assert(head.dvs.size == 1 && head.dvs.values.head.size == 1,
+        s"one file, one vector dir after $stacked deletes: ${head.dvs}")
+      val (file0, Vector(dv)) = head.dvs.head
+      val pairs = spark.read.parquet(s"$dir/$dv")
+      assert(pairs.count() == stacked &&
+        pairs.select("base", "idx").distinct().count() == stacked,
+        s"the vector must hold the $stacked net deleted rows once each")
+      assert(pairs.select("base").distinct().collect().map(_.getString(0))
+        .toSeq == Seq(new Path(file0).getName))
+      val all = ManifestTable.read(spark, dir)
+      val dvRead = all.inputFiles.filter(_.contains("/dv/"))
+        .map(p => new Path(p).getParent.getName).toSet
+      assert(dvRead == Set(new Path(dv).getName),
+        s"the scan must open file 0's one vector dir, opened $dvRead")
+      val n = all.count()
       assert(n == 262144L - stacked, s"count wrong at $stacked vectors")
       walls(target) = readWall()
     }
@@ -1425,24 +1456,10 @@ class MarqueeStressSpec extends AnyFunSuite {
     assert(ManifestTable.snapshot(spark, dir).dvs.isEmpty)
     assert(ManifestTable.read(spark, dir).count() == 262144L - stacked)
     val tAfter = readWall()
-    // CAPPED curve (r15 verdict #5): with autoPurgeAt = 64 the stack
-    // never exceeds the knee — the 64th needle triggers the scoped
-    // purge and the count resets, so reads stay at the floor band
-    var maxStack = 0
-    (1000 until 1140).foreach { i =>
-      val s = ManifestTable.deleteVector(spark, dir,
-        col("k") === i.toLong, autoPurgeAt = 64)
-      maxStack = math.max(maxStack,
-        s.dvs.values.map(_.size).foldLeft(0)(math.max))
-    }
-    assert(maxStack < 64, s"auto-purge must cap the stack, saw $maxStack")
-    val tCapped = readWall()
     info(f"plain read $tPlain%.2f s; stacked-vector reads: " +
       walls.map { case (v, t) => f"$v -> $t%.2f s" }.mkString(", ") +
       f"; far-key pruned read under 250 vectors $tFar%.2f s; " +
-      f"purge $tPurge%.2f s; post-purge read $tAfter%.2f s; " +
-      f"capped-curve read after 140 auto-purged deletes $tCapped%.2f s " +
-      f"(max stack $maxStack)")
+      f"purge $tPurge%.2f s; post-purge read $tAfter%.2f s")
   }
 
   test("delta-log commit cost: log bytes per commit stay FLAT as live " +

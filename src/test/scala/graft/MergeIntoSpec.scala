@@ -326,6 +326,50 @@ class MergeIntoSpec extends SparkSuite {
       notMatchedBySource = Seq(WhenNotMatchedBySource(Delete)))
     assert(rows(dir2) == Set((1L, 0L, "one"), (2L, 1L, "two")))
   }
+
+  test("an empty merge probe costs no extra job: an all-new-keys CDC " +
+    "upsert and a MERGE INTO whose source falls in no file's bounds " +
+    "never count the source") {
+    import spark.implicits._
+    // jobs `body` submits; the async listener bus is drained first
+    def jobsOf(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try body finally {
+        org.apache.spark.GraftListenerDrain.waitUntilEmpty(
+          spark.sparkContext, 30000)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      jobs.get
+    }
+    val cdc = freshDir("empty_probe_cdc")
+    ManifestTable.create(spark, cdc,
+      (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v")
+        .repartitionByRange(4, col("k")), statsCols = Seq("k"))
+    val upsert = (101L to 110L).map(i => (i, s"n$i")).toDF("k", "v")
+    val cdcJobs = jobsOf(ManifestTable.merge(spark, cdc, upsert, "k"))
+    assert(ManifestTable.read(spark, cdc).select("k").collect()
+      .map(_.getLong(0)).toSet == ((1L to 20L) ++ (101L to 110L)).toSet)
+    val minto = freshDir("empty_probe_minto")
+    seed(minto)
+    val fresh = (101L to 105L).map(i => (i, 0L, s"n$i")).toDF("k1", "k2", "v")
+    val mintoJobs = jobsOf(MergeInto(spark, minto, fresh, Seq("k1", "k2"),
+      matched = Seq(WhenMatched(UpdateAll)),
+      notMatched = Seq(WhenNotMatched(InsertAll))))
+    assert(rows(minto) == (1L to 10L).flatMap(i =>
+      Seq((i, 0L, s"a$i"), (i, 1L, s"b$i"))).toSet ++
+      (101L to 105L).map(i => (i, 0L, s"n$i")))
+    // each: the source window and the probe's interval join and
+    // distinct (AQE runs a stage per job), then the staging write; the
+    // empty probe's dropped observation must not add a source count()
+    assert(cdcJobs <= 5 && mintoJobs <= 5,
+      s"jobs: CDC upsert $cdcJobs, MERGE INTO $mintoJobs")
+  }
 }
 
 object MergeIntoSpec {

@@ -3,6 +3,7 @@
 
 Usage: python3 tools/check.py [sfDir] [outDir] [query ...]
        python3 tools/check.py --same <outDirA> <outDirB>
+       python3 tools/check.py --suites [reportsDir]
 
 1. Runs graft.Verify via sbt (writes per-query parquet + oracle_sql.json).
 2. Registers the sfDir parquet tables in DuckDB, runs each oracle SQL.
@@ -12,6 +13,10 @@ Usage: python3 tools/check.py [sfDir] [outDir] [query ...]
 `--same` compares two Verify output trees (say, a change and its parent)
 without DuckDB: one order-insensitive digest per query dir, and every
 dir whose digest differs, or that exists on one side only, is printed.
+
+`--suites` reads the JUnit XML reports a test run leaves (default
+target/test-reports) and prints each suite's time, the 10 slowest
+tests and the total.
 
 Driver-side-only deps (duckdb/pandas/pyarrow) — dev tooling, not shipped.
 """
@@ -420,11 +425,43 @@ def same(dir_a, dir_b):
     sys.exit(1 if diff else 0)
 
 
+def suites(reports_dir):
+    """Print each suite's time (slowest first), the 10 slowest tests and
+    the total, from the TEST-*.xml JUnit reports under `reports_dir`."""
+    import glob
+    import xml.etree.ElementTree as ET
+    files = sorted(glob.glob(os.path.join(reports_dir, "TEST-*.xml")))
+    if not files:
+        sys.exit(f"suites: no TEST-*.xml under {reports_dir}")
+    rows, cases = [], []
+    for f in files:
+        root = ET.parse(f).getroot()
+        name = root.get("name")
+        bad = int(root.get("failures", 0)) + int(root.get("errors", 0))
+        rows.append((float(root.get("time", 0)), name,
+                     int(root.get("tests", 0)), bad))
+        cases += [(float(c.get("time", 0)), name, c.get("name"))
+                  for c in root.iter("testcase")]
+    print(f"{'time s':>9}  {'tests':>5}  {'fail':>4}  suite")
+    for t, name, n, bad in sorted(rows, reverse=True):
+        print(f"{t:9.1f}  {n:5d}  {bad:4d}  {name}")
+    print("\n10 slowest tests:")
+    for t, name, case in sorted(cases, reverse=True)[:10]:
+        print(f"{t:9.1f}  {name} :: {case}")
+    print(f"\ntotal {sum(r[0] for r in rows):.1f} s over {len(rows)} "
+          f"suites, {sum(r[2] for r in rows)} tests, "
+          f"{sum(r[3] for r in rows)} failed")
+
+
 def main():
     if len(sys.argv) > 1 and sys.argv[1] == "--same":
         if len(sys.argv) != 4:
             sys.exit("usage: check.py --same <outDirA> <outDirB>")
         same(sys.argv[2], sys.argv[3])
+    if len(sys.argv) > 1 and sys.argv[1] == "--suites":
+        suites(sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+            os.path.dirname(__file__), "..", "target", "test-reports"))
+        sys.exit(0)
     if len(sys.argv) > 1 and sys.argv[1] == "--bench":
         bench_guard(tuple(sys.argv[2:]))
     if len(sys.argv) > 1 and sys.argv[1] == "--compare":
