@@ -76,5 +76,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // byte-identical) — see GraftScanStats.
     ext.injectPlannerStrategy(s => org.apache.spark.sql.GraftScanStatsStrategy(
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+    // Comparison and IN-list constants in filters and projections read
+    // from `references`: one compiled class serves every key value.
+    ext.injectColumnar(_ => graft.plans.ParamLiterals.columnar)
   }
 }

@@ -3328,10 +3328,22 @@ object ManifestTable {
     }
     val fresh = prior(touched).fold(matches)(p =>
       matches.join(broadcast(p), Seq("base", "idx"), "left_anti"))
-    fresh.write.parquet(abs.toString)
-    // which touched files actually hold hits: metadata-sized collect
-    val hitBases = spark.read.parquet(abs.toString)
-      .select("base").distinct().collect().map(_.getString(0)).toSet
+    // which touched files actually hold hits: a metadata-sized set the
+    // write itself observes. A dropped observation (the executed plan
+    // lost its CollectMetricsExec, as AQE's empty-relation replanning
+    // does to MergeInto's probe) reads the written pairs back.
+    val obs = org.apache.spark.sql.Observation()
+    fresh.observe(obs, collect_set(col("base")).as("bases"))
+      .write.parquet(abs.toString)
+    val hitBases = obs.get.get("bases") match {
+      case Some(s: scala.collection.Seq[_]) => s.map(_.toString).toSet
+      case _ =>
+        log.info(s"deletion vector on $dir@v${head.version}: hit-base " +
+          "observation dropped (no metrics from the fresh-pair write) — " +
+          "reading the written pairs back")
+        spark.read.parquet(abs.toString)
+          .select("base").distinct().collect().map(_.getString(0)).toSet
+    }
     if (hitBases.isEmpty) {
       abs.getFileSystem(conf(spark)).delete(abs, true)
       None

@@ -1222,6 +1222,42 @@ class ManifestTableSpec extends SparkSuite {
     assert(content(dir) == (21L to 50L).map(i => i -> s"v$i").toSet)
   }
 
+  test("a DV delete on a file that already has a vector learns its hit " +
+    "files from the fresh-pair write: 5 jobs, and the vector holds " +
+    "the file's net deleted pairs") {
+    val dir = freshDir("dv_jobs")
+    ManifestTable.create(spark, dir,
+      kv((1L to 60L).map(i => i -> s"v$i")).repartitionByRange(3, col("k")),
+      statsCols = Seq("k"))
+    ManifestTable.deleteVector(spark, dir, col("k") <= 5L)
+    val h1 = ManifestTable.snapshot(spark, dir)
+    val file = h1.dvs.keys.head
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val s2 = try ManifestTable.deleteVector(spark, dir, col("k") <= 12L)
+      finally {
+        org.apache.spark.GraftListenerDrain.waitUntilEmpty(
+          spark.sparkContext, 30000)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    // reading the hit bases back from the written pairs made it 8
+    assert(jobs.get == 5, s"second DV delete ran ${jobs.get} jobs")
+    assert(s2.dvs.keySet == Set(file) && s2.dvs(file).size == 1)
+    val base = file.substring(file.lastIndexOf('/') + 1)
+    val want = spark.read.parquet(new Path(dir, file).toString)
+      .where(col("k") <= 12L).select(col("_metadata.row_index")).collect()
+      .map(r => (base, r.getLong(0))).toSet
+    val got = spark.read.parquet(new Path(dir, s2.dvs(file).head).toString)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(got.length == 12 && got.toSet == want)
+    assert(content(dir) == (13L to 60L).map(i => i -> s"v$i").toSet)
+  }
+
   test("deletion vectors ride the IVM path: a DV delete refreshes the " +
     "view by its net rows only") {
     val dir = freshDir("dv_ivm")

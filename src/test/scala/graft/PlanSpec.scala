@@ -654,4 +654,28 @@ class PlanSpec extends SparkSuite {
     assert(out.toString.contains(s"ManifestFileIndex[$dir@v0: kept 1 of 4 files]"),
       s"explain must show the pruning decision:\n$out")
   }
+
+  test("a needle read's explain text is unchanged by parameterised " +
+    "literals, and the scan still pushes the real key") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("plan_param").toString
+    graft.table.ManifestTable.create(spark, dir,
+      spark.range(0, 400).selectExpr("id AS k").repartitionByRange(4, col("k")),
+      statsCols = Seq("k"))
+    val df = graft.table.ManifestTable.read(spark, dir, col("k") === 4242L)
+    assert(df.collect().isEmpty)
+    val executed = df.queryExecution.executedPlan
+    val restored = executed.transformAllExpressions {
+      case p: graft.plans.ParamLiteral => Literal(p.value, p.dataType)
+    }
+    assert(!(restored fastEquals executed), "the needle's key must be a parameter")
+    val explain = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExtendedMode)
+    assert(explain.contains(restored.treeString(verbose = true)),
+      s"explain must print the literal plan:\n$explain")
+    assert(explain.contains("= 4242)") &&
+      explain.contains("PushedFilters: [IsNotNull(k), EqualTo(k,4242)]"),
+      s"filter and pushed filter must show the key:\n$explain")
+  }
 }
