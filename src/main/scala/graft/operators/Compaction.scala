@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.table.NioLocalFileSystem
+
 /** Small-file compaction — the table-maintenance primitive a 100 TB
   * deployment runs continuously. Streaming sinks, incremental loads, and
   * over-parallel writers all leave parquet directories with thousands of
@@ -31,17 +33,11 @@ object Compaction {
   private def listDataFiles(spark: SparkSession, dir: String): (Long, Long) = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    var files = 0L
-    var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
+    val data = NioLocalFileSystem.leafFiles(fs, path).filter { f =>
       val name = f.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")) {
-        files += 1; bytes += f.getLen
-      }
+      name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
     }
-    (files, bytes)
+    (data.size.toLong, data.map(_.getLen).sum)
   }
 
   /** Rewrite `inDir` into `outDir` as ~`targetFileBytes`-sized files

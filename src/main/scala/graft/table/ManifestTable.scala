@@ -101,6 +101,16 @@ import org.apache.spark.sql.types._
   * shuffled. Re-applying the same source is content-idempotent
   * (latest-wins makes the second apply a no-op on the data).
   *
+  * '''Local commits start no process.''' Without Hadoop's native
+  * library the `file` scheme forks `chmod` for every file, `.crc`
+  * sidecar and directory a write creates, and `ls -ld` for every
+  * located status. On the local filesystem every write a commit stages
+  * runs on [[NioLocalFileSystem]] (per-write Hadoop options, the
+  * session's default filesystem untouched), the log records are written
+  * checksum-free through it, and staged files are listed without
+  * located statuses: a commit or maintenance op starts no process, and
+  * what lands on disk (modes, `.crc` sidecars) is unchanged.
+  *
   * Scale shape: every commit is one distributed parquet write + a
   * metadata-sized footer sweep + one tiny JSON rename; MERGE adds one
   * broadcast probe + one broadcast anti join over touched files only.
@@ -397,6 +407,11 @@ object ManifestTable {
 
   private def conf(spark: SparkSession): Configuration =
     spark.sparkContext.hadoopConfiguration
+
+  /** Every Spark write a commit stages goes through here: on the local
+    * scheme it runs on [[NioLocalFileSystem]], so it starts no process. */
+  private def writer(df: DataFrame) =
+    df.write.options(NioLocalFileSystem.writeOptions)
 
   /** One log listing: (committed versions, checkpointed versions, a
     * per-version file FINGERPRINT — length ⊕ mtime of the v-file),
@@ -1339,27 +1354,22 @@ object ManifestTable {
       if (presentBloomCols.isEmpty) 0 else bloomManifestBudgetBytes
     val out = rightSized(spark, df)
     if (partitionCols.isEmpty)
-      out.write.options(bloomOpts).parquet(abs.toString)
+      writer(out).options(bloomOpts).parquet(abs.toString)
     else {
       val shadowed = partitionCols.foldLeft(out) { (d, c) =>
         d.withColumn(s"$PartPrefix$c", col(c))
       }
-      shadowed.write.options(bloomOpts)
+      writer(shadowed).options(bloomOpts)
         .partitionBy(partitionCols.map(PartPrefix + _): _*)
         .parquet(abs.toString)
     }
     val c = conf(spark)
     val fs = abs.getFileSystem(c)
     val absQ = fs.makeQualified(abs).toString
-    val it = fs.listFiles(abs, true)
-    val found = Vector.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-    while (it.hasNext) {
-      val st = it.next()
+    val sealed0 = NioLocalFileSystem.leafFiles(fs, abs).filter { st =>
       val n = st.getPath.getName
-      if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        found += st
-    }
-    val sealed0 = found.result().sortBy(_.getPath.toString)
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.toString)
     val hconf = new org.apache.spark.util.SerializableConfiguration(c)
     val swept = footerFanOut(spark, "commit footer sweep",
       sealed0.map(st => (st.getPath.toString, st.getLen)), 600000L,
@@ -1507,8 +1517,8 @@ object ManifestTable {
     if (fs.exists(sealDst)) return // already checkpointed (idempotent)
     val tmpDir = new Path(lp, s".tmpck-${s.version}-${UUID.randomUUID()}")
     try {
-      spark.createDataFrame(s.files.map(fileRow).asJava, ckptFilesSchema)
-        .coalesce(1).write.parquet(tmpDir.toString)
+      writer(spark.createDataFrame(s.files.map(fileRow).asJava, ckptFilesSchema)
+        .coalesce(1)).parquet(tmpDir.toString)
       val part = fs.listStatus(tmpDir).map(_.getPath)
         .find(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
         .getOrElse(sys.error(s"checkpoint: no parquet part under $tmpDir"))
@@ -1560,24 +1570,30 @@ object ManifestTable {
     * in front — same as Delta.) */
   private def putIfAbsent(spark: SparkSession, lp: Path, text: String,
       dstName: String): Option[Throwable] = {
-    val fc = FileContext.getFileContext(lp.toUri, conf(spark))
+    lazy val fc = FileContext.getFileContext(lp.toUri, conf(spark))
     val tmp = new Path(lp, s".tmp-$dstName-${UUID.randomUUID()}")
     val dst = new Path(lp, dstName)
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      CreateOpts.createParent())
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-    // LocalFs is a ChecksumFs: drop the .crc sidecar so the commit
-    // rides on exactly ONE filesystem op (a loser's separately-moved
-    // sidecar could otherwise shadow the winner's data and fail
-    // readers with ChecksumException; HDFS checksums are block-level,
-    // no sidecar — the delete is a no-op there).
-    try fc.delete(new Path(lp, s".${tmp.getName}.crc"), false)
-    catch { case NonFatal(_) => () }
     val fs = lp.getFileSystem(conf(spark))
     val isLocal = Option(fs.getUri.getScheme).forall(_ == "file")
+    // the commit must ride on exactly ONE file: a loser's separately-
+    // moved .crc sidecar could shadow the winner's data and fail
+    // readers with ChecksumException. Locally the tmp file is written
+    // checksum-free (and process-free, see NioLocalFileSystem); through
+    // a ChecksumFs the sidecar is dropped (HDFS checksums are
+    // block-level, no sidecar — the delete is a no-op there).
+    if (isLocal && NioLocalFileSystem.available) {
+      val out = NioLocalFileSystem.raw(conf(spark)).create(tmp, false)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    } else {
+      val out = fc.create(tmp,
+        java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+        CreateOpts.createParent())
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+      try fc.delete(new Path(lp, s".${tmp.getName}.crc"), false)
+      catch { case NonFatal(_) => () }
+    }
     def lose(e: Throwable): Option[Throwable] = {
-      try fc.delete(tmp, false) catch { case NonFatal(_) => () }
+      try fs.delete(tmp, false) catch { case NonFatal(_) => () }
       Some(e)
     }
     if (isLocal) {
@@ -3333,8 +3349,8 @@ object ManifestTable {
     // lost its CollectMetricsExec, as AQE's empty-relation replanning
     // does to MergeInto's probe) reads the written pairs back.
     val obs = org.apache.spark.sql.Observation()
-    fresh.observe(obs, collect_set(col("base")).as("bases"))
-      .write.parquet(abs.toString)
+    writer(fresh.observe(obs, collect_set(col("base")).as("bases")))
+      .parquet(abs.toString)
     val hitBases = obs.get.get("bases") match {
       case Some(s: scala.collection.Seq[_]) => s.map(_.toString).toSet
       case _ =>
@@ -3350,8 +3366,8 @@ object ManifestTable {
     } else {
       val hit = touched.filter(f =>
         hitBases(f.path.substring(f.path.lastIndexOf('/') + 1)))
-      prior(hit).foreach(_.where(col("base").isin(hitBases.toSeq: _*))
-        .write.mode("append").parquet(abs.toString))
+      prior(hit).foreach(p => writer(p.where(col("base").isin(hitBases.toSeq: _*)))
+        .mode("append").parquet(abs.toString))
       Some(head.dvs ++ hit.map(_.path -> Vector(rel)))
     }
   }
@@ -3613,13 +3629,9 @@ object ManifestTable {
     var deleted = 0L
     fs.listStatus(dataRoot).foreach { st =>
       if (st.isDirectory && !live.contains(st.getPath.getName)) {
-        val it = fs.listFiles(st.getPath, true)
-        var files = 0L
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) files += 1
-        }
+        deleted += NioLocalFileSystem.leafFiles(fs, st.getPath)
+          .count(_.getPath.getName.endsWith(".parquet"))
         fs.delete(st.getPath, true)
-        deleted += files
       }
     }
     // deletion-vector sweep: same liveness rule over the dv/ root

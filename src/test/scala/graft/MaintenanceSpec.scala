@@ -8,6 +8,18 @@ import org.apache.spark.sql.functions._
   * column profiler, and typed-cogroup vs declarative-window equivalence. */
 class MaintenanceSpec extends SparkSuite {
 
+  test("scratch dirs live under a per-process root carrying this pid, so " +
+    "two JVMs on one host never share one") {
+    val root = graft.core.Scratch.root
+    assert(root.getFileName.toString ==
+      s"graft_scratch_${ProcessHandle.current.pid}")
+    assert(root.getParent == java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir")))
+    val d = graft.core.Scratch.wiped("spec_pid")
+    assert(java.nio.file.Paths.get(d) == root.resolve("spec_pid") &&
+      java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
+  }
+
   test("compaction: 64 splinter files -> 4 even files, rows preserved") {
     val in = graft.core.Scratch.dir("spec_frag_in")
     val out = graft.core.Scratch.dir("spec_frag_out")

@@ -1731,4 +1731,118 @@ class ManifestTableSpec extends SparkSuite {
     assert(ManifestTable.readVersion(spark, dir, 4L)
       .where(col("k") === 95L).count() == 1L)
   }
+
+  /** The processes graft or Hadoop code started while `op` ran, as
+    * "thread: command", from a JFR recording of `jdk.ProcessStart`
+    * around it. A start with neither a `graft.` nor an
+    * `org.apache.hadoop.` frame on its stack comes from a background
+    * thread of the shared JVM, e.g. Spark's heartbeat (`getconf
+    * PAGESIZE`) or its artifact cleaner (`rm -rf`), and lands in
+    * whichever op runs then. */
+  private def processStarts(op: () => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start(); op(); rec.stop()
+      val f = java.nio.file.Files.createTempFile("process_starts", ".jfr")
+      try {
+        rec.dump(f)
+        jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
+          .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala
+            .map(_.getMethod.getType.getName)
+            .exists(t => t.startsWith("graft.") || t.startsWith("org.apache.hadoop."))))
+          .map(e => s"${e.getThread("eventThread").getJavaName}: ${e.getString("command")}")
+      } finally java.nio.file.Files.delete(f)
+    } finally rec.close()
+  }
+
+  test("a local-filesystem commit starts no process: every commit kind " +
+    "and maintenance op runs without a jdk.ProcessStart, and what lands " +
+    "on disk carries Hadoop's modes and statuses") {
+    import java.nio.file.Files
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.RawLocalFileSystem
+    import org.apache.hadoop.fs.permission.FsPermission
+    import MergeInto.{UpdateAll, WhenMatched}
+    assume(NioLocalFileSystem.available, "needs the POSIX attribute view")
+    val dir = freshDir("no_process")
+    ManifestTable.create(spark, dir,
+      kv((1L to 40L).map(i => i -> s"r$i")).repartition(2), statsCols = Seq("k"))
+    // warm-up outside the recordings: one-time class initialisation
+    // (Hadoop's Shell probes `setsid` once per JVM) belongs to no commit
+    ManifestTable.append(spark, dir, kv(Seq(41L -> "w")))
+    val ops: Seq[(String, () => Unit)] = Seq(
+      "append" -> (() => ManifestTable.append(spark, dir, kv(Seq(42L -> "a")))),
+      "delete" -> (() => ManifestTable.delete(spark, dir, col("k") === 1L)),
+      "deleteVector" -> (() => ManifestTable.deleteVector(spark, dir, col("k") === 2L)),
+      "update" -> (() => ManifestTable.update(spark, dir, col("k") === 3L,
+        Map("v" -> lit("u")))),
+      "merge" -> (() => ManifestTable.merge(spark, dir,
+        kv(Seq(4L -> "m", 99L -> "n")), "k")),
+      "mergeInto" -> (() => MergeInto(spark, dir, kv(Seq(5L -> "mi")), Seq("k"),
+        matched = Seq(WhenMatched(UpdateAll)))),
+      "compact" -> (() => ManifestTable.compact(spark, dir)),
+      "checkpoint" -> (() => ManifestTable.checkpoint(spark, dir)),
+      "vacuum" -> (() => ManifestTable.vacuum(spark, dir)))
+    val started = ops.map { case (n, op) => n -> processStarts(op) }
+    assert(started.forall(_._2.isEmpty), "processes started per op: " +
+      started.map { case (n, cs) => s"$n ${cs.size} ${cs.take(3)}" }.mkString("; "))
+    assert(content(dir) == ((6L to 42L).map(i => i -> (if (i == 41L) "w"
+      else if (i == 42L) "a" else s"r$i")) ++ Seq(3L -> "u", 4L -> "m",
+      5L -> "mi", 99L -> "n")).toSet)
+    // same bytes on disk: every file (data, .crc sidecars, log entries,
+    // checkpoint, vectors) and every directory the commits made carries
+    // Hadoop's umask-derived default mode
+    val conf = spark.sparkContext.hadoopConfiguration
+    val umask = FsPermission.getUMask(conf)
+    val fileMode = FsPermission.getFileDefault.applyUMask(umask).toString
+    val dirMode = FsPermission.getDirDefault.applyUMask(umask).toString
+    val root = java.nio.file.Paths.get(dir)
+    val made = {
+      val walk = Files.walk(root)
+      try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_ != root)
+      finally walk.close()
+    }
+    assert(made.exists(_.getFileName.toString.endsWith(".crc")) &&
+      made.exists(_.getFileName.toString.startsWith("c")))
+    made.foreach { p =>
+      val want = if (Files.isDirectory(p)) dirMode else fileMode
+      assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(p)) ==
+        want, s"$p")
+    }
+    // the new status reports what Hadoop's `ls -ld` status reports
+    val nio = NioLocalFileSystem.raw(conf)
+    val ls = new RawLocalFileSystem
+    ls.initialize(java.net.URI.create("file:///"), conf)
+    made.map(p => new Path(p.toUri)).foreach { p =>
+      val (a, b) = (nio.getFileStatus(p), ls.getFileStatus(p))
+      assert((a.getPermission, a.getOwner, a.getGroup) ==
+        (b.getPermission, b.getOwner, b.getGroup), s"$p")
+    }
+    val listed = nio.listStatus(new Path(dir, "_graft_log"))
+    assert(listed.nonEmpty && listed.forall(st =>
+      st.getOwner == ls.getFileStatus(st.getPath).getOwner &&
+        st.getPermission.toString == fileMode))
+  }
+
+  test("checksums still guard local commits: a byte flipped in a staged " +
+    "data file fails its read with ChecksumException") {
+    val dir = freshDir("checksum")
+    val snap = ManifestTable.create(spark, dir,
+      kv((1L to 200L).map(i => i -> s"row$i")).coalesce(1), statsCols = Seq("k"))
+    val data = java.nio.file.Paths.get(dir, snap.files.head.path)
+    assert(java.nio.file.Files.exists(data.resolveSibling(s".${data.getFileName}.crc")))
+    val raf = new java.io.RandomAccessFile(data.toFile, "rw")
+    try {
+      val at = raf.length / 2
+      raf.seek(at); val b = raf.read()
+      raf.seek(at); raf.write(b ^ 0xFF)
+    } finally raf.close()
+    val e = intercept[Exception](ManifestTable.read(spark, dir).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]),
+      s"expected ChecksumException, got $e")
+  }
 }
