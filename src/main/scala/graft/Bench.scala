@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.metrics.Ledger
 object Bench {
   /** Wall seconds for a FIXED amount of single-thread integer work
     * (xorshift64*, 2×10⁸ steps ≈ 0.4 s on an unloaded core). A host
@@ -21,45 +22,49 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-  /** JVM-wide CPU seconds consumed so far (all threads). wall≫cpu over a
-    * query ⇒ the process was starved or serialized, not computing. */
-  private def procCpuSec(): Double = osBean.getProcessCpuTime / 1e9
+  /** One execution of one query: its pass (`first`, `repeat` or
+    * `retry`), its wall seconds, whether it threw, and the ledger's
+    * delta over it. */
+  private final case class Run(query: String, pass: String, sec: Double, failed: Boolean,
+      work: Map[String, Double])
 
-  /** Cumulative stop-the-world GC seconds (all collectors). A query whose
-    * cpu≈wall inflation coincides with a gc delta spike is a heap-pressure
-    * event, not a plan problem. (Round-10 driver artifact: the 3
-    * beyond-envelope queries were CONSECUTIVE in run order — positions
-    * 149-151 of 162 — i.e. one localized late-run event; this channel
-    * exists to name it from the artifact alone.) */
-  private def gcSec(): Double = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum / 1e3
+  /** The time layers a query's wall splits into; the tail names each slow
+    * query's largest. */
+  private val timeLayers = Seq("planner.analysis_s", "planner.optimization_s",
+    "planner.planning_s", "jit.compile_s", "gc.pause_s", "exec.wall_s")
+
+  private def str(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** The one stdout line, at most 1500 bytes long: the total, the query
+    * count, the failed queries (as many as fit, plus their count), the
+    * host verdict, the beyond-envelope count, the slowest queries each
+    * with its largest time layer, and the artifact path. Failed names go
+    * first, then slow entries, until the line fits. */
+  private[graft] def tailLine(total: Double, queries: Int, failed: Seq[String],
+      host: String, beyondEnvelope: Int, slowest: Seq[(String, Double, String)],
+      artifact: String): String = {
+    def line(nFailed: Int, nSlow: Int): String =
+      s"""{"metric":"total","value":$total,"unit":"sec","query_count":$queries,""" +
+        s""""failed":${failed.take(nFailed).map(str).mkString("[", ",", "]")},""" +
+        s""""failed_count":${failed.size},"host":${str(host)},""" +
+        s""""beyond_envelope":$beyondEnvelope,"slowest":""" +
+        slowest.take(nSlow).map { case (q, sec, layer) =>
+          f"[${str(q)},$sec%.2f,${str(layer)}]" }.mkString("[", ",", "]") +
+        s""","artifact":${str(artifact)}}"""
+    var nFailed = failed.size
+    var nSlow = slowest.size
+    var l = line(nFailed, nSlow)
+    while (l.getBytes("UTF-8").length > 1500 && nFailed + nSlow > 0) {
+      if (nFailed > 0) nFailed -= 1 else nSlow -= 1
+      l = line(nFailed, nSlow)
+    }
+    l
   }
 
-  /** Cumulative JIT compilation seconds. 162 queries' worth of generated
-    * whole-stage-codegen classes all pass through C1/C2; a late-run spike
-    * here (or a full code cache, below) de-optimizes exactly the tail of
-    * the run. */
-  private def jitSec(): Double = {
-    val b = java.lang.management.ManagementFactory.getCompilationMXBean
-    if (b != null && b.isCompilationTimeMonitoringSupported)
-      b.getTotalCompilationTime / 1e3 else 0.0
-  }
-
-  /** used/max bytes of the JIT code heaps. When used→max the compiler is
-    * disabled and everything after runs interpreted — the classic
-    * many-generated-classes failure mode. */
-  private def codeCache(): (Long, Long) = {
-    import scala.jdk.CollectionConverters._
-    val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-      .asScala.filter(_.getName.startsWith("CodeHeap"))
-    (pools.map(_.getUsage.getUsed).sum,
-      pools.map(p => math.max(0L, p.getUsage.getMax)).sum)
-  }
-
+  /** Usage: `Bench [query ...]`. With no args, every `q_*` query once;
+    * named queries run in the given order, repeats allowed
+    * (`Bench q_x q_x q_x` times a warm steady state). */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -75,52 +80,46 @@ object Bench {
     SparkEntry.queries.get("q_agg_pricing_summary")
       .foreach(fn => try fn(spark, sfDir).count()
       catch { case _: Throwable => () })
+    val ledger = Ledger.of(spark)
     // Headline queries = the oracle-gated q_* set; cap_* capabilities are
-    // ScalaTest-gated and excluded from the perf contract. Optional args
-    // restrict to the named queries (dev loop; the driver passes none).
-    val only = args.toSet
-    val spinBefore = spinProbe()
-    val cpu0 = procCpuSec()
-    var cpuMark = cpu0
-    val cpuPer = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    var gcMark = gcSec(); var jitMark = jitSec()
-    val gcPer = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val jitPer = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // ScalaTest-gated and excluded from the perf contract.
+    val queries = SparkEntry.queries
+    val names =
+      if (args.isEmpty) queries.keys.filterNot(_.startsWith("cap_")).toSeq
+      else args.toSeq
     // A query that THROWS must never masquerade as a fast timing: the
     // round-10 fixture regeneration broke 22 events queries at analysis
     // time and two full guard sessions recorded them as 0.07 s "wins".
     // Failures are listed in the artifact and poison the guard.
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = SparkEntry.queries
-      .filter { case (name, _) =>
-        !name.startsWith("cap_") && (only.isEmpty || only(name)) }
-      .map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: " +
-          String.valueOf(e.getMessage).linesIterator.take(1).mkString)
+    def run(name: String, pass: String): Run = {
+      val ((sec, failed), work) = ledger.measure {
+        val t0 = System.nanoTime()
+        val failed = try { queries(name)(spark, sfDir).count(); false }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: " +
+            String.valueOf(e.getMessage).linesIterator.take(1).mkString)
+          true
+        }
+        ((System.nanoTime() - t0) / 1e9, failed)
       }
-      val c1 = procCpuSec()
-      cpuPer(name) = c1 - cpuMark
-      cpuMark = c1
-      val g1 = gcSec(); gcPer(name) = g1 - gcMark; gcMark = g1
-      val j1 = jitSec(); jitPer(name) = j1 - jitMark; jitMark = j1
-      name -> (System.nanoTime() - t0) / 1e9
+      Run(name, pass, sec, failed, work)
     }
+    val spinBefore = spinProbe()
+    val runs = scala.collection.mutable.ArrayBuffer.empty[Run]
+    names.foreach(n => runs += run(n, if (runs.exists(_.query == n)) "repeat" else "first"))
     // -------- self-healing retry pass (round-13 verdict #1) --------
     // One bad host window must not fabricate a regression: r13's driver
     // artifact totalled 662.6 s against a 171–193 s quiet surface
     // because ~25 consecutive-in-run-order queries hit a hypervisor
     // starvation episode at 20–93× their quiet medians. Every query
-    // whose first-pass wall exceeds the committed quiet-median envelope
+    // whose best wall exceeds the committed quiet-median envelope
     // (median×3.2 + 0.3 s — the round-6 variance bound) is re-run ONCE
     // after the main loop (the episode has usually passed by then), and
-    // the artifact reports min(first, retry) per query: identical work
-    // twice, the smaller wall is always the closer bound on what the
-    // plan actually costs — and unlike "use the retry", it cannot be
-    // re-inflated by a second episode landing on the retry itself.
-    // First-pass walls for retried queries ship in queries_first_pass.
+    // the artifact reports the smallest wall of its successful runs:
+    // identical work each time, the smaller wall is always the closer
+    // bound on what the plan actually costs — and unlike "use the retry",
+    // it cannot be re-inflated by a second episode landing on the retry.
+    // Every execution, retries included, is one entry of `runs`.
     val medians: Map[String, Double] = try {
       val medPath = sys.env.getOrElse("SPARK_GRAFT_MEDIANS", "tools/bench_medians.json")
       val txt = new String(java.nio.file.Files.readAllBytes(
@@ -128,38 +127,32 @@ object Bench {
       """"([^"]+)":\s*([0-9.Ee+-]+)""".r.findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap - "_total"
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    val retried = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // per-retry cpu/gc/jit (r14 ADVICE): a healed wall from a fully
-    // warm JVM must carry ITS OWN counters, or triage pairs a retry
-    // wall with first-pass jit and muddies starved-vs-slow
-    val retryCpu = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val retryGc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val retryJit = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val retryCandidates = results.toSeq
-      .filter { case (name, sec) => !failed.contains(name) &&
-        medians.get(name).exists(m => sec > m * 3.2 + 0.3) }
-      .sortBy { case (name, sec) => -(sec / math.max(medians(name), 1e-9)) }
+    val failed = runs.filter(_.failed).map(_.query).distinct
+    // the smallest successful wall per query, or its first wall if none
+    // succeeded; the best run also names the query's largest layer
+    def best(q: String): Run = {
+      val rs = runs.filter(_.query == q)
+      val ok = rs.filterNot(_.failed)
+      if (ok.isEmpty) rs.head else ok.minBy(_.sec)
+    }
+    def beyond(q: String): Boolean =
+      medians.get(q).exists(m => best(q).sec > m * 3.2 + 0.3)
+    val retryCandidates = names.distinct
+      .filter(q => !failed.contains(q) && beyond(q))
+      .sortBy(q => -(best(q).sec / math.max(medians(q), 1e-9)))
       .take(60) // bound the healing pass; worst offenders first
     // a spin reading right before the retries: the artifact then shows
     // whether the healing pass itself ran on a quiet or a loaded host
     val spinMid =
       if (retryCandidates.isEmpty) -1.0 else spinProbe()
-    retryCandidates.foreach { case (name, _) =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        val (c0, g0, j0) = (procCpuSec(), gcSec(), jitSec())
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count()
-          retried(name) = (System.nanoTime() - t0) / 1e9
-          retryCpu(name) = procCpuSec() - c0
-          retryGc(name) = gcSec() - g0
-          retryJit(name) = jitSec() - j0
-        } catch { case _: Throwable => () } // keep the first-pass wall
-      }
-    }
-    val healed = results.map { case (k, v) =>
-      k -> math.min(v, retried.getOrElse(k, v)) }
+    retryCandidates.foreach(q => runs += run(q, "retry"))
     val spinAfter = spinProbe()
-    val cpuTotal = procCpuSec() - cpu0
+    val healed = names.distinct.map(q => q -> best(q))
+    val total = healed.map(_._2.sec).sum
+    // triage runs on the HEALED walls: an offender surviving here was
+    // beyond-envelope twice in one session — that is a finding about
+    // the plan (or a sustained episode host_health names), not noise
+    val offenders = healed.map(_._1).filter(beyond)
     // host-health verdict: the spin probes run identical single-thread
     // work, so any spread is machine weather; loadavg names co-tenant
     // pressure the guest CAN see (hypervisor starvation it cannot —
@@ -170,78 +163,20 @@ object Bench {
       case scala.util.control.NonFatal(_) => -1.0 }
     val spinWorst = math.max(spinBefore, spinAfter)
     val hostVerdict =
-      if (spinWorst > 0.65 || retried.size > results.size / 10) "degraded"
+      if (spinWorst > 0.65 || retryCandidates.size > healed.size / 10) "degraded"
       else "quiet"
-    val qs = healed.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val qsFirst = retried.keysIterator
-      .map(k => s"\"" + k + "\":" + results(k)).mkString("{", ",", "}")
-    val qsRetry = retried.keysIterator.map { k =>
-      f""""$k":{"sec":${retried(k)}%.3f,"cpu_sec":${retryCpu.getOrElse(k, 0.0)}%.3f,"gc_sec":${retryGc.getOrElse(k, 0.0)}%.3f,"jit_sec":${retryJit.getOrElse(k, 0.0)}%.3f}"""
-    }.mkString("{", ",", "}")
-    val qsCpu = cpuPer.map { case (k, v) => f""""$k":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val qsGc = gcPer.map { case (k, v) => f""""$k":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val qsJit = jitPer.map { case (k, v) => f""""$k":$v%.3f""" }
-      .mkString("{", ",", "}")
-    val (ccUsed, ccMax) = codeCache()
-    val total = if (healed.nonEmpty) healed.values.sum else 0.0
-    // queries_cpu / proc_cpu_sec / spin_sec: measurement-integrity channel
-    // (extra keys; the driver's parse reads only metric/value/queries).
-    // A query whose wall time spikes while its cpu share stays flat was
-    // starved by the host, not slowed by its plan.
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val hostHealth = s"""{"verdict":"$hostVerdict","spin_sec":[${f"$spinBefore%.3f"},${f"$spinMid%.3f"},${f"$spinAfter%.3f"}],"loadavg":$loadavg,"code_cache":[$ccUsed,$ccMax],"retried":${retried.size}}"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$failedJson,"proc_cpu_sec":${f"$cpuTotal%.1f"},"spin_sec":[${f"$spinBefore%.3f"},${f"$spinAfter%.3f"}],"queries_cpu":$qsCpu,"queries_gc":$qsGc,"queries_jit":$qsJit,"code_cache":[$ccUsed,$ccMax],"queries_first_pass":$qsFirst,"queries_retry":$qsRetry,"host_health":$hostHealth}"""
-    println(full)
-    // Self-triage (round-10 verdict): reconcile THIS run against the
-    // controlled median-of-3 file so every driver artifact carries its own
-    // noise analysis instead of waiting a round for a manual
-    // `check.py --compare`. Envelope = median*3.2 + 0.3s, the host-load
-    // spread measured on unchanged code in the round-6 variance study
-    // (identical back-to-back full runs totalled 49.2/57.1/76.7s with
-    // per-query spreads up to 3.1x). Best-effort: a missing medians file
-    // must not fail the bench.
-    try {
-      // triage runs on the HEALED walls: an offender surviving here was
-      // beyond-envelope twice in one session — that is a finding about
-      // the plan (or a sustained episode host_health names), not noise
-      val offenders = healed.toSeq
-        .flatMap { case (name, sec) => medians.get(name).collect {
-          case m if sec > m * 3.2 + 0.3 =>
-            // a HEALED wall (retry < first pass) reports the RETRY's
-            // own counters and says so, so adjudication can tell a
-            // warm re-run from a first-pass measurement (r14 ADVICE)
-            val isHealed = retried.get(name).exists(_ < results(name))
-            val cpu = if (isHealed) retryCpu.getOrElse(name, 0.0)
-              else cpuPer.getOrElse(name, 0.0)
-            val gc = if (isHealed) retryGc.getOrElse(name, 0.0)
-              else gcPer.getOrElse(name, 0.0)
-            val jit = if (isHealed) retryJit.getOrElse(name, 0.0)
-              else jitPer.getOrElse(name, 0.0)
-            (sec / math.max(m, 1e-9), f"""{"query":"$name","sec":$sec%.2f,"guard_median":$m%.2f,"healed":$isHealed,"cpu_sec":$cpu%.2f,"gc_sec":$gc%.2f,"jit_sec":$jit%.2f}""")
-        } }
-        .sortBy(-_._1).map(_._2)
-      val compared = healed.keysIterator.count(medians.contains)
-      println(s"""{"metric":"triage","beyond_envelope":${offenders.size},"compared":$compared,"envelope":"median*3.2+0.3s","offenders":[${offenders.mkString(",")}]}""")
-    } catch { case scala.util.control.NonFatal(_) => () }
-    // Compact total-only line (kept for artifact continuity with earlier
-    // rounds): the driver tail-captures output, and in round 1 the single
-    // long line was truncated from the front ("parsed": null). A short
-    // line near the end always survives tail capture.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}""")
-    // Slim CONTRACT line LAST (round-17 verdict item 2): metric/value/
-    // queries/sf only, per-query seconds at millisecond precision — ~7 KB
-    // instead of the ~30 KB full-channel line above, so the driver's
-    // log-tail capture can finally parse per-query data (PERF per_query /
-    // scaling were empty in r16/r17 because the full line, printed first,
-    // lost its front to the tail window). Full-precision values and every
-    // integrity channel stay in the full line + the file artifact below.
-    // Additions/reordering only — the timing loop is untouched.
-    val qsSlim = healed.map { case (k, v) => f""""$k":$v%.3f""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsSlim,"sf":"$sfDir"}""")
+    val codeCache = ledger.snapshot()("code_cache.used").toLong
+    def num(v: Double): String =
+      if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString else f"$v%.4f"
+    val qs = healed.map { case (k, r) => str(k) + ":" + r.sec }.mkString("{", ",", "}")
+    val runsJson = runs.map { r =>
+      s"""{"query":${str(r.query)},"pass":"${r.pass}","sec":${f"${r.sec}%.4f"},""" +
+        s""""failed":${r.failed},"work":""" +
+        r.work.toSeq.sortBy(_._1).map { case (k, v) => str(k) + ":" + num(v) }
+          .mkString("{", ",", "}") + "}"
+    }.mkString("[", ",", "]")
+    val hostHealth = s"""{"verdict":"$hostVerdict","spin_sec":[${f"$spinBefore%.3f"},${f"$spinMid%.3f"},${f"$spinAfter%.3f"}],"loadavg":$loadavg,"code_cache_used":$codeCache,"retried":${retryCandidates.size}}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${str(sfDir)},"failed":${failed.map(str).mkString("[", ",", "]")},"host_health":$hostHealth,"beyond_envelope":${offenders.map(str).mkString("[", ",", "]")},"runs":$runsJson}"""
     // File artifact (round-7 advice): every BENCH_r*.json to date lost
     // ~35 queries to log-tail truncation; the engine writes the per-query
     // map itself so nothing depends on scraping an sbt log. Best-effort —
@@ -252,6 +187,12 @@ object Bench {
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (full + "\n").getBytes("UTF-8"))
     catch { case scala.util.control.NonFatal(_) => () }
+    val slowest = healed.sortBy(-_._2.sec).take(10).map { case (q, r) =>
+      (q, r.sec, timeLayers.maxBy(l => r.work.getOrElse(l, 0.0))) }
     spark.stop()
+    // the driver keeps the last 2000 characters of the log: one short
+    // line, printed last, always survives that capture whole
+    println(tailLine(total, healed.size, failed.toSeq, hostVerdict, offenders.size,
+      slowest, out))
   }
 }

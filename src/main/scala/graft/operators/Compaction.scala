@@ -55,7 +55,8 @@ object Compaction {
       math.max(1L, (bytesBefore + targetFileBytes - 1) / targetFileBytes).toInt)
     val n = math.min(want.toLong, math.max(filesBefore, 1L)).toInt
     val df = spark.read.parquet(inDir)
-    df.repartition(n).write.mode("overwrite").parquet(outDir)
+    df.repartition(n).write.options(NioLocalFileSystem.writeOptions)
+      .mode("overwrite").parquet(outDir)
     val (filesAfter, _) = listDataFiles(spark, outDir)
     val rows = spark.read.parquet(outDir).count()
     Stats(filesBefore, bytesBefore, filesAfter, rows)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: write `.explain("formatted")` of named registry queries to
   * files — the before/after plan evidence the optimization rounds
-  * commit under plans/r<N>/. Usage:
+  * commit under plans/r<N>/ — and print each plan's [[PlanShape]]
+  * signature. Usage:
   *   runMain graft.tools.ExplainDump <outDir> <suffix> <query ...>
   * Runs at the bench shape (local[32], shuffle=32, sf0.1). */
 object ExplainDump {
@@ -28,7 +29,8 @@ object ExplainDump {
           org.apache.spark.sql.execution.FormattedMode)
         Files.write(outDir.resolve(s"${q}_$suffix.txt"),
           txt.getBytes("UTF-8"))
-        println(s"[explain] wrote ${q}_$suffix.txt")
+        println(s"[explain] wrote ${q}_$suffix.txt: " +
+          PlanShape.of(df.queryExecution.executedPlan.toString))
       } catch { case e: Throwable =>
         println(s"[explain] $q FAILED: ${e.getMessage}")
       }

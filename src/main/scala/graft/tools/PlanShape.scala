@@ -27,21 +27,3 @@ object PlanShape {
   }
 }
 
-/** Dev tool: print the plan signature of named queries (pin-list loop). */
-object PlanShapeDump {
-  def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    args.foreach { q =>
-      val p = graft.SparkEntry.queries(q)(spark, d)
-        .queryExecution.executedPlan.toString
-      println(s"SHAPE $q -> ${PlanShape.of(p)}")
-    }
-    spark.stop()
-  }
-}

@@ -1232,21 +1232,11 @@ class ManifestTableSpec extends SparkSuite {
     ManifestTable.deleteVector(spark, dir, col("k") <= 5L)
     val h1 = ManifestTable.snapshot(spark, dir)
     val file = h1.dvs.keys.head
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val s2 = try ManifestTable.deleteVector(spark, dir, col("k") <= 12L)
-      finally {
-        org.apache.spark.GraftListenerDrain.waitUntilEmpty(
-          spark.sparkContext, 30000)
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    val (s2, work) = graft.metrics.Ledger.of(spark)
+      .measure(ManifestTable.deleteVector(spark, dir, col("k") <= 12L))
+    val jobs = work("exec.jobs").toInt
     // reading the hit bases back from the written pairs made it 8
-    assert(jobs.get == 5, s"second DV delete ran ${jobs.get} jobs")
+    assert(jobs == 5, s"second DV delete ran $jobs jobs")
     assert(s2.dvs.keySet == Set(file) && s2.dvs(file).size == 1)
     val base = file.substring(file.lastIndexOf('/') + 1)
     val want = spark.read.parquet(new Path(dir, file).toString)
@@ -1772,6 +1762,9 @@ class ManifestTableSpec extends SparkSuite {
     // warm-up outside the recordings: one-time class initialisation
     // (Hadoop's Shell probes `setsid` once per JVM) belongs to no commit
     ManifestTable.append(spark, dir, kv(Seq(41L -> "w")))
+    val plain = freshDir("no_process_plain")
+    kv((1L to 40L).map(i => i -> s"p$i")).repartition(4).write.mode("overwrite")
+      .parquet(plain)
     val ops: Seq[(String, () => Unit)] = Seq(
       "append" -> (() => ManifestTable.append(spark, dir, kv(Seq(42L -> "a")))),
       "delete" -> (() => ManifestTable.delete(spark, dir, col("k") === 1L)),
@@ -1784,7 +1777,9 @@ class ManifestTableSpec extends SparkSuite {
         matched = Seq(WhenMatched(UpdateAll)))),
       "compact" -> (() => ManifestTable.compact(spark, dir)),
       "checkpoint" -> (() => ManifestTable.checkpoint(spark, dir)),
-      "vacuum" -> (() => ManifestTable.vacuum(spark, dir)))
+      "vacuum" -> (() => ManifestTable.vacuum(spark, dir)),
+      "plainCompact" -> (() => graft.operators.Compaction.compact(spark, plain,
+        freshDir("no_process_compacted"), targetFiles = Some(2))))
     val started = ops.map { case (n, op) => n -> processStarts(op) }
     assert(started.forall(_._2.isEmpty), "processes started per op: " +
       started.map { case (n, cs) => s"$n ${cs.size} ${cs.take(3)}" }.mkString("; "))

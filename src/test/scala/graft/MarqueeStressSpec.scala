@@ -40,6 +40,10 @@ class MarqueeStressSpec extends AnyFunSuite {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
+  /** `f`'s result and the work it did, as [[graft.metrics.Ledger]] deltas. */
+  private def measured[T](f: => T): (T, Map[String, Double]) =
+    graft.metrics.Ledger.of(spark).measure(f)
+
   /** Synthetic sparse corpus: n docs × 12 tokens drawn hash-uniform from
     * an n-slot vocab (df ≈ Poisson(12) — bounded posting lists at every
     * n, the realistic sparse-text shape). */
@@ -243,33 +247,21 @@ class MarqueeStressSpec extends AnyFunSuite {
     val n = 1L << 20
     val stars = spark.range(n).filter(pmod(col("id"), lit(8)) =!= 0)
       .select(((col("id") / 8).cast("long") * 8).as("d1"), col("id").as("d2"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     // AQE submits every query stage as its own Spark job, which would
     // make "jobs" count shuffle stages, not actions — and a runtime
     // broadcast conversion adds collection jobs on top. Pin both off so
     // one action is exactly one job for the duration of the metric.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.addSparkListener(listener)
-    val (bad, tStars) = try timed {
+    val ((bad, tStars), work) = try measured(timed {
       graft.operators.DedupGroups.components(stars)
         .filter(col("lbl") =!= (col("v") / 8).cast("long") * 8).count()
-    } finally {
-      // listener events are async; drain DETERMINISTICALLY before reading
-      // the counter (a fixed sleep was flaky on a loaded host — r8 advice)
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(
-        spark.sparkContext, 30000)
-      spark.sparkContext.removeSparkListener(listener)
+    }) finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
     val rounds = graft.operators.DedupGroups.lastRounds.get()
-    val nJobs = jobs.get()
+    val nJobs = work("exec.jobs").toInt
     info(f"128k stars: $tStars%.1f s, $rounds rounds, $nJobs jobs")
     assert(bad == 0L, s"$bad vertices mislabeled")
     assert(rounds <= 3, s"star corpus took $rounds rounds, diameter is 2")
@@ -420,23 +412,12 @@ class MarqueeStressSpec extends AnyFunSuite {
         xxhash64(col("id")).as("dim"))
       .localCheckpoint(eager = false)
 
-    val taskReads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          taskReads.add((t.stageId,
-            t.taskMetrics.shuffleReadMetrics.recordsRead))
-    }
     /** Run one action; return per-task shuffle-read records of the join
       * stage (= the stage with the largest total shuffle read). */
     def joinStageTasks(action: => Long): (Long, Seq[Long]) = {
-      taskReads.clear()
-      val n = action
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      import scala.jdk.CollectionConverters._
-      val byStage = taskReads.asScala.toSeq.groupBy(_._1)
-        .map { case (st, xs) => st -> xs.map(_._2) }
+      val (n, tasks) = graft.metrics.Ledger.of(spark).perTask(action)
+      val byStage = tasks.groupBy(_.stageId)
+        .map { case (st, xs) => st -> xs.map(_.shuffleReadRecords) }
       (n, byStage.maxBy(_._2.sum)._2)
     }
     def spread(xs: Seq[Long]): (Long, Long, Double) = {
@@ -447,7 +428,6 @@ class MarqueeStressSpec extends AnyFunSuite {
 
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.addSparkListener(listener)
     try {
       val (nU, unsaltedTasks) = joinStageTasks(
         big.join(small, col("k") === col("k2")).count())
@@ -468,8 +448,6 @@ class MarqueeStressSpec extends AnyFunSuite {
       assert(maxS * 4 < maxU,
         s"salting should cut the worst task's input ≥4x: $maxU -> $maxS")
     } finally {
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
@@ -511,20 +489,11 @@ class MarqueeStressSpec extends AnyFunSuite {
     val d1 = java.nio.file.Files.createTempDirectory("graft_xbrl_m1").toString
     val d2 = java.nio.file.Files.createTempDirectory("graft_xbrl_m2").toString
 
-    // per-stage shuffle-write accounting: snapshot a listener counter at
-    // each materialization boundary (deterministic drain before reading)
-    val shuffleW = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleW.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    def snap(): Double = {
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      shuffleW.get() / 1e6
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    // per-stage shuffle-write accounting: snapshot the ledger's counter
+    // at each materialization boundary
+    def snap(): Double =
+      graft.metrics.Ledger.of(spark).snapshot()("shuffle.write_bytes") / 1e6
+    locally {
       val (_, tWrite) = timed { FP.writeBatch(b1, d1); FP.writeBatch(b2, d2) }
       val s0 = snap()
       val facts1 = FP.extractFacts(FP.ingest(spark, d1))
@@ -610,8 +579,6 @@ class MarqueeStressSpec extends AnyFunSuite {
         f"rollup $tRoll%.1f s (${s6 - s5}%.0f MB) | land $tLand%.1f s")
       info(s"retention: upserted $nUp -> exact $nEx -> near $nNear " +
         s"over $nPeriods periods")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -637,19 +604,10 @@ class MarqueeStressSpec extends AnyFunSuite {
       .select("l_suppkey", "o_custkey").distinct().count()
     val nSupp = lineitem.select("l_suppkey").distinct().count()
 
-    val recs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        recs.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.addSparkListener(listener)
     try {
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      recs.set(0)
-      val (rows, secs) = timed {
+      val ((rows, secs), work) = measured(timed {
         lineitem
           .join(orders, col("l_orderkey") === col("o_orderkey"))
           .groupBy("l_suppkey")
@@ -658,9 +616,8 @@ class MarqueeStressSpec extends AnyFunSuite {
           .agg(count(lit(1)).as("n_suppliers"),
             sum(col("l_suppkey")).cast("long").as("supp_sum"))
           .orderBy("degree").collect()
-      }
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      val written = recs.get()
+      })
+      val written = work("shuffle.write_records").toLong
       // result invariants against independently-computed ground truth
       assert(rows.map(_.getLong(1)).sum == nSupp,
         "every supplier appears in exactly one degree bucket")
@@ -680,7 +637,6 @@ class MarqueeStressSpec extends AnyFunSuite {
         s"$written shuffle records (linear bound $bound), " +
         s"$distinctPairs distinct pairs, ${rows.length} degree buckets")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
     }
   }
@@ -710,12 +666,6 @@ class MarqueeStressSpec extends AnyFunSuite {
     val dim = spark.range(50000L)
       .select(pmod(xxhash64(col("id"), lit(77)), lit(keySpace)).as("pk"))
       .distinct()
-    val recs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        recs.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // First finding of this test, kept for the record: with the filtered
@@ -728,14 +678,10 @@ class MarqueeStressSpec extends AnyFunSuite {
     val prevRf = spark.conf
       .get("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
     try {
       def measure(f: => Long): (Long, Long) = {
-        org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-        recs.set(0)
-        val out = f
-        org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-        (out, recs.get())
+        val (out, work) = measured(f)
+        (out, work("shuffle.write_records").toLong)
       }
       val (plainN, plainRecs) = measure(
         fact.join(dim, col("fk") === col("pk")).count())
@@ -749,7 +695,6 @@ class MarqueeStressSpec extends AnyFunSuite {
         s"$preRecs (${plainRecs / math.max(preRecs, 1)}x reduction) for " +
         s"$plainN matching rows of $nFact fact rows")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
       spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", prevRf)
     }
@@ -767,28 +712,18 @@ class MarqueeStressSpec extends AnyFunSuite {
       (col("id") % 4).cast("string").as("g"),
       pmod(xxhash64(col("id"), lit(31)), lit(100000L)).as("x"),
       pmod(xxhash64(col("id"), lit(37)), lit(100000L)).as("y"))
-    val recs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        recs.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      recs.set(0)
+    locally {
       val distinctPts = pts.distinct()
       val w = org.apache.spark.sql.expressions.Window.partitionBy("g")
         .orderBy("x", "y")
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val ((frontier, nDistinct), secs) = timed {
+      val (((frontier, nDistinct), secs), work) = measured(timed {
         val f = distinctPts.withColumn("pm", min(col("y")).over(w))
           .filter(col("pm").isNull || col("y") < col("pm"))
           .select("g", "x", "y").collect()
         (f, distinctPts.count())
-      }
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      val written = recs.get()
+      })
+      val written = work("shuffle.write_records").toLong
       // work bound: distinct shuffle (≤n) + window shuffle (≤distinct) +
       // the recount's re-shuffle of distinct — linear, never pairwise
       assert(written <= 3 * n + 1000,
@@ -815,8 +750,6 @@ class MarqueeStressSpec extends AnyFunSuite {
       info(f"4M-point skyline in $secs%.1f s: ${frontier.length} frontier " +
         s"points over $nDistinct distinct, $written shuffle records " +
         s"(linear bound ${3 * n})")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -834,21 +767,11 @@ class MarqueeStressSpec extends AnyFunSuite {
         i => (pmod(xxhash64(col("id"), i), lit(1000)).cast("float")
           / lit(1000.0f)).cast("float")).as("embedding"))
       .localCheckpoint(true) // synth cost out of the measured window
-    val recs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        recs.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      recs.set(0)
+    locally {
       val iters = 4
-      val (tc, secs) = timed(
-        graft.operators.PowerIteration.topComponent(emb, iters = iters))
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      val written = recs.get()
+      val ((tc, secs), work) = measured(timed(
+        graft.operators.PowerIteration.topComponent(emb, iters = iters)))
+      val written = work("shuffle.write_records").toLong
       assert(math.abs(tc.vector.map(x => x * x).sum - 1.0) < 1e-9)
       tc.rayleigh.sliding(2).foreach { case Seq(a, b) =>
         assert(b >= a - 1e-6 * math.abs(a), s"rayleigh decreased: $a -> $b")
@@ -860,8 +783,6 @@ class MarqueeStressSpec extends AnyFunSuite {
           "the corpus went on the wire")
       info(f"$iters rounds over $n×R$dim in $secs%.1f s: $written shuffle " +
         s"records (bound $bound), lambda1 = ${tc.rayleigh.last}")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -883,19 +804,8 @@ class MarqueeStressSpec extends AnyFunSuite {
       element_at(types,
         (pmod(xxhash64(col("id"), lit(9)), lit(5)) + 1).cast("int"))
         .as("event_type"))
-    val stageRecs =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        stageRecs.add((s.stageInfo.stageId,
-          s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      stageRecs.clear()
-      val (out, secs) = timed {
+    locally {
+      val ((out, secs), tasks) = graft.metrics.Ledger.of(spark).perTask(timed {
         val sets = events
           .groupBy(col("user_id"), col("day"))
           .agg(sort_array(collect_set(col("event_type"))).as("tset"))
@@ -912,10 +822,10 @@ class MarqueeStressSpec extends AnyFunSuite {
           .groupBy(col("p.ta").as("ta"), col("p.tb").as("tb"))
           .agg(count(lit(1)).as("c"))
         tally.collect()
-      }
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      val perStage = stageRecs.toArray(Array.empty[(Int, Long)])
-        .filter(_._2 > 0).sortBy(-_._2)
+      })
+      val perStage = tasks.groupBy(_.stageId)
+        .map { case (st, ts) => st -> ts.map(_.shuffleWriteRecords).sum }
+        .toSeq.filter(_._2 > 0).sortBy(-_._2)
       // tally: C(5,2)=10 pairs + 5 singletons + 1 universe = 16 keys
       assert(out.length == 16, s"tagged tally must hold 16 keys: ${out.length}")
       val userDays = out.filter(r => r.isNullAt(0) && r.isNullAt(1))
@@ -934,8 +844,6 @@ class MarqueeStressSpec extends AnyFunSuite {
       info(f"1M-event lift in $secs%.1f s: sets shuffle " +
         s"${perStage.head._2} records, post-sets stages " +
         s"${rest.map(_._2).sum} records over $userDays user-days")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -955,20 +863,10 @@ class MarqueeStressSpec extends AnyFunSuite {
       pmod(xxhash64(col("id"), lit(5)), lit(support)).as("v"),
       (col("id") % 2).as("isa"))
       .withColumn("grp", lit("g"))
-    val recs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        recs.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      recs.set(0)
-      val (ks, secs) = timed(graft.operators.ExactStats
-        .ksNumerator(rows, "grp", "v", "isa").collect().head)
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      val wire = recs.get()
+    locally {
+      val ((ks, secs), work) = measured(timed(graft.operators.ExactStats
+        .ksNumerator(rows, "grp", "v", "isa").collect().head))
+      val wire = work("shuffle.write_records").toLong
       assert(ks.getLong(1) + ks.getLong(2) == n, "histogram lost rows")
       assert(wire * 4 < n,
         s"KS shuffled $wire records for $n rows — support bound broken")
@@ -990,8 +888,6 @@ class MarqueeStressSpec extends AnyFunSuite {
       info(f"16M-row KS in $secs%.1f s: $wire shuffle records " +
         f"(${n / math.max(wire, 1)}%d× under row count), " +
         s"ks_num=$best over n1=$n1, n2=$n2")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -1008,20 +904,10 @@ class MarqueeStressSpec extends AnyFunSuite {
     val rows = spark.range(n).select(lit(0L).as("g"),
       pmod(xxhash64(col("id"), lit(3)), lit(50L)).as("x"),
       pmod(xxhash64(col("id"), lit(7)), lit(20L)).as("y"))
-    val recs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        recs.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      recs.set(0)
-      val (r, secs) = timed(graft.operators.ExactStats
-        .kendallTau(rows, "g", "x", "y").collect().head)
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      val wire = recs.get()
+    locally {
+      val ((r, secs), work) = measured(timed(graft.operators.ExactStats
+        .kendallTau(rows, "g", "x", "y").collect().head))
+      val wire = work("shuffle.write_records").toLong
       assert(r.getLong(1) == n, "histogram lost rows")
       assert(wire * 4 < n,
         s"Kendall shuffled $wire records for $n rows — support bound broken")
@@ -1039,8 +925,6 @@ class MarqueeStressSpec extends AnyFunSuite {
       info(f"16M-row Kendall in $secs%.1f s: $wire shuffle records " +
         f"(${n / math.max(wire, 1)}%d× under row count), " +
         s"C=$conc D=$disc over ${h.length} cells")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -1055,22 +939,12 @@ class MarqueeStressSpec extends AnyFunSuite {
     // magnitude.
     val nKeys = 1000000L
     val keys = spark.range(nKeys).select(col("id").as("k"))
-    val recs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        recs.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
     val inParts = keys.rdd.getNumPartitions.toLong
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      recs.set(0)
-      val (regs, hllSecs) = timed {
+    locally {
+      val ((regs, hllSecs), hllWork) = measured(timed {
         graft.operators.Sketches.hllRegisters(keys, "k").collect()
-      }
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      val hllWritten = recs.get()
+      })
+      val hllWritten = hllWork("shuffle.write_records").toLong
       assert(regs.length <= 64)
       val est = graft.operators.Sketches.hllEstimate(
         spark.createDataFrame(
@@ -1093,15 +967,12 @@ class MarqueeStressSpec extends AnyFunSuite {
       // LSH census at 100k clustered vectors
       val vecs = clusteredEmbeddings(100000L).localCheckpoint()
       val vParts = vecs.rdd.getNumPartitions.toLong
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      recs.set(0)
-      val (census, lshSecs) = timed {
+      val ((census, lshSecs), lshWork) = measured(timed {
         graft.operators.Sketches.lshBandCensus(
           graft.operators.Sketches.walshSignatures(
             vecs, "embedding", "vec_id")).orderBy("band").collect()
-      }
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      val lshWritten = recs.get()
+      })
+      val lshWritten = lshWork("shuffle.write_records").toLong
       assert(census.length == 4)
       assert(census.map(_.getLong(2)).sum == 4L * 100000L,
         "every vector lands once per band")
@@ -1117,8 +988,6 @@ class MarqueeStressSpec extends AnyFunSuite {
         s"$lshWritten shuffle records (bound $lshBound), " +
         s"cand_pairs_x2 per band: " +
         census.map(_.getLong(4)).mkString(","))
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -1353,24 +1222,11 @@ class MarqueeStressSpec extends AnyFunSuite {
     // task of the 20 timed deletes read (scans and vector reads alike)
     def drive(dir: String): (Double, Int, Long) = {
       var vectored = 0
-      val records = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          Option(e.taskMetrics).foreach(m =>
-            records.addAndGet(m.inputMetrics.recordsRead))
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      try needles.foreach { n =>
+      val ((_, secs), work) = measured(timed(needles.foreach { n =>
         val s = ManifestTable.deleteVector(spark, dir, col("k") === n)
         vectored = s.dvs.size
-      } finally {
-        org.apache.spark.GraftListenerDrain.waitUntilEmpty(
-          spark.sparkContext, 30000)
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      (((System.nanoTime() - t0) / 1e9), vectored, records.get)
+      }))
+      (secs, vectored, work("scan.records").toLong)
     }
     // untimed warmup on BOTH twins: the first deleteVector of the JVM
     // pays codegen/JIT for the whole path — without this, whichever

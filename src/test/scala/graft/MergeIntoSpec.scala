@@ -331,22 +331,9 @@ class MergeIntoSpec extends SparkSuite {
     "upsert and a MERGE INTO whose source falls in no file's bounds " +
     "never count the source") {
     import spark.implicits._
-    // jobs `body` submits; the async listener bus is drained first
-    def jobsOf(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try body finally {
-        org.apache.spark.GraftListenerDrain.waitUntilEmpty(
-          spark.sparkContext, 30000)
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      jobs.get
-    }
+    // jobs `body` submits
+    def jobsOf(body: => Unit): Int =
+      graft.metrics.Ledger.of(spark).measure(body)._2("exec.jobs").toInt
     val cdc = freshDir("empty_probe_cdc")
     ManifestTable.create(spark, cdc,
       (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v")
@@ -367,6 +354,7 @@ class MergeIntoSpec extends SparkSuite {
     // each: the source window and the probe's interval join and
     // distinct (AQE runs a stage per job), then the staging write; the
     // empty probe's dropped observation must not add a source count()
+    info(s"jobs: CDC upsert $cdcJobs, MERGE INTO $mintoJobs")
     assert(cdcJobs <= 5 && mintoJobs <= 5,
       s"jobs: CDC upsert $cdcJobs, MERGE INTO $mintoJobs")
   }

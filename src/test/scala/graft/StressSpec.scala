@@ -419,23 +419,13 @@ class StressSpec extends SparkSuite {
         s"else $uniq end as text")
       .localCheckpoint(eager = false)
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
     def measured(hashed: Boolean): (Set[(Long, Long, Long)], Long) = {
-      shuffleBytes.set(0L)
-      val rows = graft.operators.SpanDedup
+      val (rows, work) = graft.metrics.Ledger.of(spark).measure(graft.operators.SpanDedup
         .coverage(docs, hashed = hashed)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      (rows, shuffleBytes.get())
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
+      (rows, work("shuffle.write_bytes").toLong)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    locally {
       val (hRows, hBytes) = measured(hashed = true)
       val (sRows, sBytes) = measured(hashed = false)
       assert(hRows == sRows, "hashed span keys diverged from raw-text keys")
@@ -447,8 +437,6 @@ class StressSpec extends SparkSuite {
       assert(hBytes * 2 < sBytes,
         s"hashed keys should cut shuffle payload ≥2x (measured 2.83x when " +
           s"seeded): $sBytes -> $hBytes")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -467,22 +455,12 @@ class StressSpec extends SparkSuite {
       // so every copy block repeats the same multiset
       "concat_ws(' ', transform(sequence(0, 7), " +
         "p -> concat('w', cast((id % 2000) * (p + 3) % 17 as string)))) as text")
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffleRecords.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
     def measured(copies: Int): (Seq[graft.operators.BpeTrain.Merge], Long) = {
-      shuffleRecords.set(0L)
-      val merges = graft.operators.BpeTrain.train(
-        graft.operators.BpeTrain.wordDict(corpus(copies)), numMerges = 5)
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      (merges, shuffleRecords.get())
+      val (merges, work) = graft.metrics.Ledger.of(spark).measure(graft.operators.BpeTrain
+        .train(graft.operators.BpeTrain.wordDict(corpus(copies)), numMerges = 5))
+      (merges, work("shuffle.write_records").toLong)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    locally {
       val (m1, r1) = measured(1)
       val (m20, r20) = measured(20)
       assert(m1.size == 5 && m20.size == 5)
@@ -496,8 +474,6 @@ class StressSpec extends SparkSuite {
       assert(r20 <= r1 * 2,
         s"20x corpus must not shuffle ~20x records ($r1 -> $r20): " +
           "the dict build's map-side combine or the pair count is broken")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -522,18 +498,9 @@ class StressSpec extends SparkSuite {
       .select(col("ud"), explode(col("types")).as("event_type"))
       .repartition(8)
       .localCheckpoint(eager = true)
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffleRecords.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
     def measure[A](body: => A): (A, Long) = {
-      shuffleRecords.set(0L)
-      val r = body
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      (r, shuffleRecords.get())
+      val (r, work) = graft.metrics.Ledger.of(spark).measure(body)
+      (r, work("shuffle.write_records").toLong)
     }
     def tagged(): Array[(String, String, Long)] = {
       val sets = ev.groupBy("ud")
@@ -566,8 +533,7 @@ class StressSpec extends SparkSuite {
           .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    locally {
       val (mTag, rTag) = measure(tagged())
       val (mJoin, rJoin) = measure(selfJoin())
       assert(mTag.sorted.toSeq == mJoin.sorted.toSeq,
@@ -579,8 +545,6 @@ class StressSpec extends SparkSuite {
       assert(rTag * 2 < rJoin,
         s"tagged tally ($rTag) should shuffle well under half the " +
           s"self-join's records ($rJoin)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 
@@ -596,21 +560,11 @@ class StressSpec extends SparkSuite {
       "case when id % 2 = 0 then concat('hot', cast((id div 2) % 10 as string)) " +
         "else concat('tail', cast(id % 100000 as string)) end as term")
       .repartition(8).localCheckpoint(eager = true)
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffleRecords.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
     def measure[A](body: => A): (A, Long) = {
-      shuffleRecords.set(0L)
-      val a = body
-      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 30000)
-      (a, shuffleRecords.get())
+      val (a, work) = graft.metrics.Ledger.of(spark).measure(body)
+      (a, work("shuffle.write_records").toLong)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    locally {
       import org.apache.spark.sql.functions._
       val (sketch, skRecords) = measure {
         rows.agg(graft.operators.HeavyHitters.heavyHitters(64)(col("term")).as("sk"))
@@ -637,8 +591,6 @@ class StressSpec extends SparkSuite {
       assert(skRecords * 100 <= exRecords,
         s"sketch must ship ~tasks summaries, not the key domain " +
           s"($skRecords vs $exRecords)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 

@@ -190,17 +190,14 @@ def bench_guard(only=()):
             os.remove(artifact)
         r = subprocess.run(cmd, cwd="/root/repo", capture_output=True,
                            text=True, env=env)
-        # prefer the file artifact Bench writes (immune to log truncation —
-        # the round-7 "parsed": null fix); fall back to scraping stdout
+        # the file artifact Bench writes is the one source: stdout holds
+        # only Bench's short tail line
         m = None
         try:
             with open(artifact) as f:
                 m = json.loads(f.read())
-        except Exception:
+        except (OSError, json.JSONDecodeError):
             pass
-        for line in r.stdout.splitlines():
-            if m is None and '"queries"' in line:
-                m = json.loads(line[line.index("{"):])
         if r.returncode != 0 or m is None:
             print(r.stdout[-3000:]); print(r.stderr[-2000:])
             print("BENCH-GUARD: bench run failed")
@@ -338,18 +335,25 @@ def bench_compare(path):
                  f"`check.py --bench` first to produce one.")
     print(f"wall times: {source}")
     # cpu annotation for offenders: cpu≈wall*cores means compute inflation,
-    # cpu<<wall means the host starved the run — different diagnoses
+    # cpu<<wall means the host starved the run — different diagnoses. The
+    # process CPU of each query's fastest successful run, from `runs`.
     cpu = {}
     sib = os.path.join(os.path.dirname(os.path.abspath(path)),
                        "BENCH_QUERIES.json")
     for cand in (path, sib):
         try:
-            c = json.load(open(cand)).get("queries_cpu")
-            if isinstance(c, dict):
-                cpu = c
-                break
+            runs = json.load(open(cand)).get("runs")
         except (OSError, json.JSONDecodeError):
-            pass
+            continue
+        if isinstance(runs, list):
+            best = {}
+            for r in runs:
+                q = r["query"]
+                if not r["failed"] and (q not in best
+                                        or r["sec"] < best[q]["sec"]):
+                    best[q] = r
+            cpu = {q: r["work"]["proc.cpu_s"] for q, r in best.items()}
+            break
     med_path = os.path.join(os.path.dirname(__file__), "bench_medians.json")
     try:
         med = json.load(open(med_path))
